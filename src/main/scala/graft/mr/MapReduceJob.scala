@@ -15,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Stage semantics reproduced exactly (SURVEY.md §2.1):
   *   - O1 source: input dir enumerated sorted-by-name, files dealt
-  *     round-robin into `numMappers` groups (manager/__main__.py:364-390).
+  *     round-robin into `numMappers` groups (manager/__main__.py:364-390),
+  *     one task per group — exactly the reference's map-task
+  *     composition. Input files are plain UTF-8 text on a local or
+  *     shared filesystem, read by [[LocalLines]] (no compression codecs,
+  *     no Hadoop filesystems — neither is in the reference's contract).
   *   - O2 map: executable gets lines on stdin, emits 0..n lines per
   *     input line (worker/__main__.py:113-158) → `RDD.pipe`, or a typed
   *     per-line closure.
@@ -40,25 +44,25 @@ import org.apache.spark.sql.SparkSession
   *
   * Known reference quirk NOT replicated: with more map tasks than input
   * files the reference crashes running `sort` on nonexistent temp files
-  * (worker/__main__.py:122-151); empty partitions are fine here.
+  * (worker/__main__.py:122-151); here the job simply runs one map task
+  * per file.
   */
 object MapReduceJob {
 
-  /** O1 — enumerate `inputDir` sorted by name, deal files round-robin
-    * into `numMappers` groups (split granularity = whole files, like the
-    * reference; map semantics are per-line so byte-range splits would be
-    * equivalent, but this preserves task composition for exe parity). */
+  /** O1 — enumerate `inputDir` sorted by name and deal the files
+    * round-robin into `numMappers` groups: partition i of the result
+    * reads, in sorted order, exactly the files whose index is ≡ i
+    * (mod `numMappers`). There are `min(numMappers, #files)` partitions,
+    * so `pipe` runs the mapper once per group, like the reference's one
+    * worker process per map task. Files are never split: map semantics
+    * are per-line, and whole-file groups keep stateful mappers on the
+    * reference's task composition. */
   def inputRdd(spark: SparkSession, inputDir: String, numMappers: Int): RDD[String] = {
-    val files = listSorted(Paths.get(inputDir))
-    if (files.isEmpty) spark.sparkContext.emptyRDD[String]
-    else {
-      val groups = files.zipWithIndex
-        .groupBy { case (_, i) => i % numMappers }
-        .toSeq.sortBy(_._1)
-        .map { case (_, fs) => fs.map(_._1.toString) }
-      spark.sparkContext.union(
-        groups.map(fs => spark.sparkContext.textFile(fs.mkString(","))))
-    }
+    requireMappers(numMappers)
+    val files = listSorted(Paths.get(inputDir)).map(_.toString).toVector
+    readGroups(spark, (0 until math.min(numMappers, files.size)).map { g =>
+      (g until files.size by numMappers).map(files)
+    })
   }
 
   /** O3–O5 — md5-partition on the first-TAB field, whole-line sort
@@ -81,20 +85,26 @@ object MapReduceJob {
       .map(_._1)
   }
 
-  /** O1 variant — one RDD partition per input file (sorted by name), so
+  /** O1 variant — one partition per input file (sorted by name), so
     * `pipe` spawns the mapper executable exactly once per file: the
     * reference's invocation granularity (worker/__main__.py:126-133).
-    * The default [[inputRdd]] pipes once per PARTITION — identical output
-    * only for line-stateless mappers (a big file split across partitions
-    * would run a stateful mapper more than once; two small files in one
-    * partition would run it once for both). Use this mode when the
-    * mapper carries cross-line state (e.g. `awk END{...}` counters). */
-  def inputRddPerFile(spark: SparkSession, inputDir: String): RDD[String] = {
-    val files = listSorted(Paths.get(inputDir))
-    if (files.isEmpty) spark.sparkContext.emptyRDD[String]
-    else spark.sparkContext.union(
-      files.map(f => spark.sparkContext.textFile(f.toString).coalesce(1)))
-  }
+    * The default [[inputRdd]] pipes once per mapper GROUP — identical
+    * output only for line-stateless mappers (two files dealt to one
+    * group run a stateful mapper once for both). Use this mode when the
+    * mapper carries per-file state (e.g. `awk END{...}` counters). Same
+    * reader and input contract as [[inputRdd]]. */
+  def inputRddPerFile(spark: SparkSession, inputDir: String): RDD[String] =
+    readGroups(spark, listSorted(Paths.get(inputDir)).map(f => Seq(f.toString)))
+
+  /** One partition per group; partition i streams group i's files in
+    * order through [[LocalLines]]. */
+  private def readGroups(spark: SparkSession, groups: Seq[Seq[String]]): RDD[String] =
+    if (groups.isEmpty) spark.sparkContext.emptyRDD[String]
+    else spark.sparkContext.parallelize(groups, groups.size)
+      .mapPartitions(gs => new LocalLines(gs.flatten.toSeq))
+
+  private def requireMappers(numMappers: Int): Unit =
+    require(numMappers >= 1, s"numMappers must be positive: $numMappers")
 
   /** Full executable-contract job (the reference CLI's semantics).
     *
@@ -115,6 +125,7 @@ object MapReduceJob {
       perFileMapper: Boolean = false,
       committerSink: Boolean = false,
       rawNewlineParity: Boolean = false): Unit = {
+    requireMappers(numMappers)
     val input =
       if (perFileMapper) inputRddPerFile(spark, inputDir)
       else inputRdd(spark, inputDir, numMappers)
@@ -149,7 +160,7 @@ object MapReduceJob {
     * is a valid combiner and the final output is identical to
     * [[typed]] — spec-pinned byte equality. The local sort buffers one
     * map task's output in memory, the same unit Hadoop's spill buffer
-    * holds; input splits bound its size. */
+    * holds; its input partition bounds its size. */
   def typedWithCombiner(spark: SparkSession, input: RDD[String],
       mapper: String => IterableOnce[String],
       combiner: Iterator[String] => Iterator[String],

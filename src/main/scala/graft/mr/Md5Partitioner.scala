@@ -1,6 +1,5 @@
 package graft.mr
 
-import java.math.BigInteger
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
@@ -68,12 +67,30 @@ class Md5Partitioner(override val numPartitions: Int,
 }
 
 object Md5Partitioner {
-  /** `int(md5(key).hexdigest(), 16) % r` over the UTF-8 bytes of `key`. */
+  /** `int(md5(key).hexdigest(), 16) % r` over the UTF-8 bytes of `key`.
+    * On the per-record shuffle path, so it reuses one `MessageDigest` and
+    * digest buffer per thread and folds the 128-bit digest mod `r` byte
+    * by byte (`(acc * 256 + b) % r` stays below 2^39 in a Long) instead
+    * of building a `BigInteger`. */
   def partitionFor(key: String, r: Int): Int = {
-    val digest = MessageDigest.getInstance("MD5")
-      .digest(key.getBytes(StandardCharsets.UTF_8))
-    new BigInteger(1, digest).mod(BigInteger.valueOf(r.toLong)).intValue()
+    require(r > 0, s"r must be positive: $r")
+    val md = md5.get()
+    md.update(key.getBytes(StandardCharsets.UTF_8))
+    val digest = digestBuf.get()
+    md.digest(digest, 0, digest.length)
+    var acc = 0L
+    var i = 0
+    while (i < digest.length) {
+      acc = (acc * 256 + (digest(i) & 0xff)) % r
+      i += 1
+    }
+    acc.toInt
   }
+
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() =>
+    MessageDigest.getInstance("MD5"))
+  private val digestBuf = ThreadLocal.withInitial[Array[Byte]](() =>
+    new Array[Byte](16))
 
   /** Orders lines as the reference sorts raw mapper output: with the
     * trailing '\n' attached. Differs from natural String order only

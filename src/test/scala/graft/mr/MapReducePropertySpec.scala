@@ -1,7 +1,12 @@
 package graft.mr
 
+import java.math.BigInteger
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import scala.util.Random
 
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-style tests for the parity-critical invariants
@@ -33,6 +38,28 @@ class MapReducePropertySpec extends AnyFunSuite {
         assert(a === Md5Partitioner.partitionFor(l.takeWhile(_ != '\t'), r))
       }
     }
+  }
+
+  test("partitionFor equals int(md5, 16) % R computed with BigInteger") {
+    def reference(key: String, r: Int): Int = {
+      val digest = MessageDigest.getInstance("MD5")
+        .digest(key.getBytes(StandardCharsets.UTF_8))
+      new BigInteger(1, digest).mod(BigInteger.valueOf(r.toLong)).intValue()
+    }
+    // any Unicode scalar value: ASCII, the BMP and supplementary planes
+    val codePoint = Gen.frequency(3 -> Gen.choose(0, 0x7f),
+      2 -> Gen.choose(0x80, 0xd7ff), 1 -> Gen.choose(0xe000, 0x10ffff))
+    val key = Gen.listOf(codePoint).map(cps => new String(cps.toArray, 0, cps.size))
+    val prop = Prop.forAll(key, Gen.choose(1, 1000)) { (key, r) =>
+      Md5Partitioner.partitionFor(key, r) == reference(key, r)
+    }
+    val result = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(2000).withInitialSeed(Seed(42L)), prop)
+    assert(result.passed, result.status)
+    // the widest R: the fold's accumulator must not overflow
+    for (key <- Seq("", "a", "ü键", "x" * 100))
+      assert(Md5Partitioner.partitionFor(key, Int.MaxValue) ===
+        reference(key, Int.MaxValue))
   }
 
   test("shuffleSort: permutation-preserving, adjacency-grouped, one partition per key") {

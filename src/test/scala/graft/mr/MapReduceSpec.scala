@@ -356,6 +356,103 @@ class MapReduceJobSpec extends AnyFunSuite {
       Files.readAllLines(Paths.get(out, p)).asScala)
     assert(lines.sorted === Seq("n\t1", "n\t2", "n\t3"))
   }
+
+  test("inputRdd: min(M, files) partitions, partition i = sorted files " +
+    "with index ≡ i (mod M), in order") {
+    val in = tmpDir("mr-groups")
+    val names = (0 until 7).map(i => f"f$i%02d.txt")
+    // written out of order: grouping follows the sorted names
+    names.reverse.foreach(n => writeFile(in, n, s"$n:1\n$n:2\n"))
+    for (m <- Seq(1, 3, 4, 7, 10)) {
+      val rdd = MapReduceJob.inputRdd(spark, in.toString, m)
+      assert(rdd.getNumPartitions === math.min(m, names.size), s"M=$m")
+      val got = rdd.glom().collect().toSeq.map(_.toSeq)
+      val want = (0 until math.min(m, names.size)).map { g =>
+        names.indices.filter(_ % m == g).flatMap(k =>
+          Seq(s"${names(k)}:1", s"${names(k)}:2"))
+      }
+      assert(got === want, s"M=$m")
+    }
+    val perFile = MapReduceJob.inputRddPerFile(spark, in.toString)
+    assert(perFile.getNumPartitions === names.size)
+    assert(perFile.glom().collect().toSeq.map(_.toSeq) ===
+      names.map(n => Seq(s"$n:1", s"$n:2")))
+  }
+
+  test("the mapper runs once per mapper group, not once per Hadoop split") {
+    val in = tmpDir("mr-once")
+    // big enough that sc.textFile would split each file in two
+    (0 until 6).foreach(i => writeFile(in, s"f$i.txt",
+      (1 to 500 + i).map(k => s"line$k").mkString("", "\n", "\n")))
+    val countExe = writeExe(tmpDir("mr-once-exe"), "count.sh",
+      "#!/bin/sh\nawk 'END { print NR }'\n")
+    assert(spark.sparkContext.textFile(in.resolve("f2.txt").toString)
+      .getNumPartitions > 1, "fixture files are splittable by Hadoop")
+    val m = 4
+    val counts = MapReduceJob.inputRdd(spark, in.toString, m)
+      .pipe(countExe).collect().toSeq.map(_.toInt)
+    // groups {0,4} {1,5} {2} {3}: one output line per group, in order
+    assert(counts === Seq(500 + 504, 501 + 505, 502, 503))
+  }
+
+  test("line reader output equals sc.textFile's on line-ending, BOM and " +
+    "invalid-UTF-8 edge cases") {
+    val in = tmpDir("mr-edge")
+    val utf8 = (s: String) => s.getBytes(StandardCharsets.UTF_8)
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    val bad = Array(0xFF, 0x61, 0xC3, 0x0A, 0xE2, 0x82, 0x0D, 0xC0, 0xAF,
+      0x0A, 0xED, 0xA0, 0x80, 0x62, 0xF0, 0x9F, 0x98).map(_.toByte)
+    // a CR as the last byte of the reader's buffer with its LF in the
+    // next read, and a line longer than the buffer
+    val straddle = "x" * (LocalLines.BufferBytes - 1) + "\r\ny\r" +
+      "z" * (3 * LocalLines.BufferBytes) + "\n"
+    // named in sorted order, the order the reader deals them
+    val files: Seq[(String, Array[Byte])] = Seq(
+      "a_crlf" -> utf8("one\r\ntwo\r\n\r\nthree\r\n"),
+      "b_cr" -> utf8("one\rtwo\r\rthree\r"),
+      "c_blank" -> utf8("\n\nx\n\n"),
+      "d_nofinal" -> utf8("first\nlast without newline"),
+      "e_empty" -> Array.emptyByteArray,
+      "f_bom" -> (bom ++ utf8("héllo\nmid\uFEFFbom\n")),
+      "g_bomonly" -> bom,
+      "h_bomnl" -> (bom ++ utf8("\n")),
+      "i_bad" -> bad,
+      "j_straddle" -> utf8(straddle),
+      "k_mixed" -> utf8("a\r\n\rb\n\r\nc"))
+    files.foreach { case (n, b) => Files.write(in.resolve(n), b) }
+    val oracle = files.map { case (n, _) =>
+      spark.sparkContext.textFile(in.resolve(n).toString).collect().toSeq
+    }
+    val got = MapReduceJob.inputRddPerFile(spark, in.toString)
+      .glom().collect().toSeq.map(_.toSeq)
+    assert(got.size === files.size)
+    for (((name, _), (g, o)) <- files.zip(got.zip(oracle)))
+      assert(g === o, s"$name: ${g.map(_.take(40))} vs ${o.map(_.take(40))}; " +
+        s"lengths ${g.map(_.length)} vs ${o.map(_.length)}")
+    assert(MapReduceJob.inputRdd(spark, in.toString, 1).collect().toSeq ===
+      oracle.flatten)
+    // the fixture exercises what it claims to
+    assert(oracle(8).exists(_.contains('\uFFFD')))
+    assert(oracle(4).isEmpty && oracle(6).isEmpty && oracle(7) === Seq(""))
+  }
+
+  test("numMappers < 1 fails loudly, naming numMappers") {
+    val in = tmpDir("mr-zero")
+    writeFile(in, "f.txt", "x\n")
+    val cat = writeExe(tmpDir("mr-zero-exe"), "cat.sh", "#!/bin/sh\ncat\n")
+    val out = tmpDir("mr-zero-out").toString
+    val errs = Seq(
+      intercept[IllegalArgumentException](
+        MapReduceJob.inputRdd(spark, in.toString, 0)),
+      intercept[IllegalArgumentException](
+        MapReduceJob.inputRdd(spark, tmpDir("mr-zero-empty").toString, -1)),
+      intercept[IllegalArgumentException](
+        MapReduceJob.runExe(spark, in.toString, out, cat, cat, numMappers = 0)),
+      intercept[IllegalArgumentException](
+        MapReduceJob.runExe(spark, in.toString, out, cat, cat, numMappers = 0,
+          perFileMapper = true)))
+    errs.foreach(e => assert(e.getMessage.contains("numMappers"), e.getMessage))
+  }
 }
 
 class MapReduceDriverSpec extends AnyFunSuite {
