@@ -31,7 +31,8 @@ object IterProbe {
     val d = args(0)
     val which = args(1)
     val maxRounds = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

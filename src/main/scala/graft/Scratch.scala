@@ -17,9 +17,11 @@ object Scratch {
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

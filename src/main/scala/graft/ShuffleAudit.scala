@@ -83,7 +83,8 @@ object ShuffleAudit {
       if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.benchQueries ++ SparkEntry.benchIterQueries ++
         SparkEntry.benchHeavyQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

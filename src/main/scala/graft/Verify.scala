@@ -45,7 +45,8 @@ object Verify {
             SparkEntry.benchHeavyQueries).toSet
         else args(2).split(",").toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Shuffle partitions FOLLOW DATA VOLUME, not core count (round 10,
     // encoding round 9's measured layout lesson as the default): at the
     // sf10 rung the old cpus-tied default packed ~7.5M shuffle rows per

@@ -278,7 +278,8 @@ object StreamingOps {
     * in its own `batch_id=N` partition dir with overwrite semantics, so
     * a replayed batch (failure between sink write and checkpoint
     * advance — the classic at-least-once window) rewrites the same dir
-    * byte-for-byte instead of appending duplicates. Together with the
+    * with the same rows instead of appending duplicates (the parquet
+    * files themselves differ from replay to replay). Together with the
     * checkpoint this upgrades foreachBatch file output to effective
     * exactly-once. */
   def commitBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =

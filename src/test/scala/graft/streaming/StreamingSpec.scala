@@ -706,4 +706,53 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(replayed === once) // overwrite made the replay a no-op
   }
+
+  test("a checkpointed linedir replay into commitBatch spawns no chmod or " +
+    "readlink process") {
+    import java.nio.file.{Files, Paths}
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val work = Files.createTempDirectory("graft-ldspawn")
+    val in = s"$work/in"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
+    Files.createDirectories(Paths.get(in))
+    // one hour of "micros,user,type,value" lines per file
+    val base = 1700000000000000L
+    (0 until 3).foreach { h =>
+      val lines = (0 until 20).map(m =>
+        s"${base + h * 3600000000L + m * 60000000L},${m % 4},click,1.5")
+      Files.write(Paths.get(in, s"f$h.txt"), lines.asJava)
+    }
+    // Shell's static initializer probes `setsid` once per JVM; keep that
+    // spawn outside the recording
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val events = spark.readStream.format("linedir")
+        .option("maxFilesPerTrigger", 1).load(in)
+        .select(split($"value", ",").as("p"))
+        .select(timestamp_micros($"p"(0).cast("long")).as("ts"),
+          $"p"(1).cast("long").as("user_id"), $"p"(2).as("event_type"),
+          $"p"(3).cast("double").as("value"))
+      val q = StreamingOps.hourlyCounts(events).writeStream
+        .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) =>
+          StreamingOps.commitBatch(b.toDF(), id, out))
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    } finally rec.stop()
+    val dump = work.resolve("spawns.jfr")
+    rec.dump(dump); rec.close()
+    val spawned = RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command"))
+      .filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    assert(spawned.size === 0,
+      s"${spawned.size} chmod/readlink spawns, e.g. ${spawned.take(3)}")
+    // the replay did commit state, offsets and sink files
+    assert(spark.read.parquet(out).count() > 0)
+  }
 }
