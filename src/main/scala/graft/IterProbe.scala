@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only iterative-engine cost breakdown (NOT part of the driver
@@ -31,16 +31,8 @@ object IterProbe {
     val d = args(0)
     val which = args(1)
     val maxRounds = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-iterprobe", shufflePartitions =
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt))
 
     def timed(label: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only warm-timing harness for perf iteration (not part of the
   * driver contract): runs named queries N times each against a fixture
@@ -17,15 +16,7 @@ object Scratch {
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scratch")
     if (sys.env.contains("SCRATCH_EXPLAIN")) {
       // plan-smell audit: flag the shapes that do not survive scale-up
       // (the shared engine behind plans.PlanSmellGateSpec's allowlist)

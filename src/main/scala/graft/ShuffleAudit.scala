@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.graftshim.ListenerShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume audit main → one JSON file of per-query task-metric
   * totals (tools/shuffle.py runs it at two scale factors and commits
@@ -83,16 +82,7 @@ object ShuffleAudit {
       if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.benchQueries ++ SparkEntry.benchIterQueries ++
         SparkEntry.benchHeavyQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-shuffleaudit")
 
     def force(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

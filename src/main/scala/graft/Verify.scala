@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Also writes
@@ -45,8 +44,7 @@ object Verify {
             SparkEntry.benchHeavyQueries).toSet
         else args(2).split(",").toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = GraftSession.defaultCores
     // Shuffle partitions FOLLOW DATA VOLUME, not core count (round 10,
     // encoding round 9's measured layout lesson as the default): at the
     // sf10 rung the old cpus-tied default packed ~7.5M shuffle rows per
@@ -56,15 +54,10 @@ object Verify {
     // SPARK_GRAFT_SHUFFLE_PARTITIONS still overrides (the ladder's
     // layout-experiment knob).
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        derivedShufflePartitions(inputBytes(sfDir), cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
+        .getOrElse(derivedShufflePartitions(inputBytes(sfDir), cpus))
+    val spark = GraftSession.local("graft-verify", cpus,
+      Some(shufflePartitions))
     new java.io.File(outDir).mkdirs()
     // scalar+parallel probe pair BEFORE and AFTER the measured queries
     // (round 11, verdict item 4): every artifact built on this JVM's
@@ -83,12 +76,8 @@ object Verify {
     // sharing one edge relation) is preserved while nothing survives
     // into the next group. Peak block-manager storage is sampled after
     // each query and recorded in storage.json — the managed-surface
-    // evidence SCALE.md cites. SPARK_GRAFT_NO_SWEEP=1 disables the
-    // group-boundary sweeps (the final sweep stays): the measurement
-    // arm that quantifies what the registry buys — same suite, same
-    // session, unmanaged accumulation — so SCALE.md's peak-storage
-    // claim is a measured delta, not a prose argument.
-    val noSweep = sys.env.get("SPARK_GRAFT_NO_SWEEP").contains("1")
+    // evidence SCALE.md cites (SHARED_r11/r12 measured it against a
+    // no-sweep arm).
     // Per-QUERY stray reclamation (round 12): after each result is
     // written, drop every LineageCut generation/pin no rotation will
     // ever release (Caches.strayUnpersist — ownership-aware: pack
@@ -96,9 +85,6 @@ object Verify {
     // the granularity SHARED_r11 proved pack-boundary sweeps cannot
     // reach: the sf10 sweep arm OOM'd IN-pack on eleven graph
     // queries' edge-sized pins before any boundary sweep could run.
-    // SPARK_GRAFT_NO_STRAY=1 is the measurement arm that restores the
-    // r11 behavior (strays left to the ContextCleaner).
-    val noStray = sys.env.get("SPARK_GRAFT_NO_STRAY").contains("1")
     var straysDropped = 0
     var prevGroup = ""
     var peakMem = 0L; var peakDisk = 0L; var peakRdds = 0
@@ -112,7 +98,7 @@ object Verify {
       val fn = q.run
       val group = name.takeWhile(!_.isDigit)
       if (group != prevGroup) {
-        if (!noSweep) Caches.sweep(spark)
+        Caches.sweep(spark)
         prevGroup = group
       }
       val t0 = System.nanoTime()
@@ -129,7 +115,7 @@ object Verify {
       }
       // AFTER the peak sample: the record keeps the within-query
       // footprint; what the next query inherits is memos only
-      if (!noStray) straysDropped += Caches.strayUnpersist(spark)
+      straysDropped += Caches.strayUnpersist(spark)
     }
     Caches.sweep(spark)
     val probeEnd = Calibration.probe(spark)

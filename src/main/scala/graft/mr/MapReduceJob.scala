@@ -78,7 +78,7 @@ object MapReduceJob {
       rawNewlineParity: Boolean = false): RDD[String] = {
     implicit val ord: Ordering[String] =
       if (rawNewlineParity) Md5Partitioner.rawNewlineOrdering
-      else Ordering.String
+      else Md5Partitioner.codePointOrdering
     mapped.map(l => (l, null: Any))
       .repartitionAndSortWithinPartitions(
         new Md5Partitioner(numReducers, rawNewlineParity))
@@ -129,12 +129,20 @@ object MapReduceJob {
     val input =
       if (perFileMapper) inputRddPerFile(spark, inputDir)
       else inputRdd(spark, inputDir, numMappers)
-    val mapped = input.pipe(mapperExe)
-    val reduced = shuffleSort(mapped, numReducers, rawNewlineParity)
-      .pipe(reducerExe)
+    val mapped = pipeUtf8(input, mapperExe)
+    val reduced =
+      pipeUtf8(shuffleSort(mapped, numReducers, rawNewlineParity), reducerExe)
     if (committerSink) writePartFilesCommitter(reduced, outputDir)
     else writePartFiles(reduced, outputDir)
   }
+
+  /** `rdd.pipe(exe)` with UTF-8 on both ends of the pipe. Spark's
+    * default is the JVM's charset, US-ASCII on a host without a locale,
+    * which turns every non-ASCII character into '?'. `exe` is split on
+    * whitespace, as `pipe(String)` does. */
+  private def pipeUtf8(rdd: RDD[String], exe: String): RDD[String] =
+    rdd.pipe(exe.split("\\s+").filter(_.nonEmpty).toSeq,
+      encoding = StandardCharsets.UTF_8.name)
 
   /** Typed twin: per-line mapper + sorted-run reducer, no shell needed.
     * The reducer sees one partition's lines in sorted order (same keys
@@ -168,7 +176,7 @@ object MapReduceJob {
       numReducers: Int): RDD[String] = {
     val combined = input.flatMap(mapper).mapPartitions { it =>
       val arr = it.toArray
-      java.util.Arrays.sort(arr, implicitly[Ordering[String]])
+      java.util.Arrays.sort(arr, Md5Partitioner.codePointOrdering)
       combiner(arr.iterator)
     }
     shuffleSort(combined, numReducers).mapPartitions(reducer)

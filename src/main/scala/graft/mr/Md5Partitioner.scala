@@ -17,9 +17,10 @@ import org.apache.spark.Partitioner
   * [[MapReduceJob]]).
   *
   * Keys here are WHOLE LINES: partitioning extracts the first-TAB field,
-  * while sorting (done by `repartitionAndSortWithinPartitions` with the
-  * natural String ordering) uses the full line — exactly the reference's
-  * split: md5 on the key field, `sort`/`heapq.merge` on whole lines.
+  * while sorting (done by `repartitionAndSortWithinPartitions` with
+  * [[Md5Partitioner.codePointOrdering]]) uses the full line — exactly
+  * the reference's split: md5 on the key field, `sort`/`heapq.merge` on
+  * whole lines.
   *
   * Byte-parity caveats (placement parity is exact; whole-FILE parity has
   * two edge cases): the reference worker iterates mapper stdout with the
@@ -92,24 +93,41 @@ object Md5Partitioner {
   private val digestBuf = ThreadLocal.withInitial[Array[Byte]](() =>
     new Array[Byte](16))
 
+  /** Whole-line order: Unicode code-point order, which is unsigned
+    * UTF-8 byte order, i.e. `LC_ALL=C sort`. `String.compareTo` is
+    * UTF-16 code-unit order instead, and puts a surrogate pair (a code
+    * point ≥ U+10000) BELOW U+E000–U+FFFF. */
+  val codePointOrdering: Ordering[String] = new LineOrdering(false)
+
   /** Orders lines as the reference sorts raw mapper output: with the
-    * trailing '\n' attached. Differs from natural String order only
+    * trailing '\n' attached. Differs from [[codePointOrdering]] only
     * when one line is a strict prefix of the other and the longer
     * continues with a char below '\n' (in practice '\t'): then the
     * LONGER line sorts first. Allocation-free — the virtual newline is
     * compared, never appended. */
-  val rawNewlineOrdering: Ordering[String] = new Ordering[String] {
+  val rawNewlineOrdering: Ordering[String] = new LineOrdering(true)
+
+  private final class LineOrdering(virtualNewline: Boolean)
+      extends Ordering[String] {
     override def compare(a: String, b: String): Int = {
       val n = math.min(a.length, b.length)
       var i = 0
       while (i < n) {
         val ca = a.charAt(i); val cb = b.charAt(i)
-        if (ca != cb) return Character.compare(ca, cb)
+        if (ca != cb)
+          return if (ca >= 0xD800 && cb >= 0xD800) lift(ca) - lift(cb)
+            else ca - cb
         i += 1
       }
       if (a.length == b.length) 0
+      else if (!virtualNewline) a.length - b.length
       else if (a.length < b.length) Character.compare('\n', b.charAt(n))
       else Character.compare(a.charAt(n), '\n')
     }
   }
+
+  /** Below 0xD800 code-unit order is code-point order. Among units
+    * ≥ 0xD800, a surrogate (D800–DFFF) is part of a pair encoding a
+    * code point ≥ U+10000, so it moves above E000–FFFF. */
+  private def lift(c: Char): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
 }

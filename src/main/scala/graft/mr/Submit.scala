@@ -62,14 +62,7 @@ object Submit {
   }
 
   def main(argv: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-submit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-submit")
     val a = parse(argv.toSeq)
     run(spark, argv.toSeq, new MapReduceDriver(spark)) match {
       case Some(id) =>

@@ -31,36 +31,39 @@ import org.apache.spark.sql.functions._
   * IterProbe's `hits` unroll at sf10 attributed the old wall to
   * edge-sized sort-merge joins: each half-round evaluated its
   * edge⋈score SMJ TWICE — once inside the one-row max's broadcast
-  * subquery, once in the normalize join — plus, in the shipped
-  * single-pin layout, an edge-sized reshuffle of the u-keyed pin onto
-  * `v` every h-half-round):
+  * subquery, once in the normalize join — plus an edge-sized reshuffle
+  * of the u-keyed pin onto `v` every h-half-round):
   *
-  *   - SETUP pins ONE narrow `(u, v)` edge copy pre-partitioned on
-  *     `pinKey` plus the node-sized degree table (derived FROM the
-  *     pin, so the caller's edge plan is evaluated exactly once).
+  *   - SETUP pins ONE narrow `(u, v)` edge copy pre-partitioned on `u`
+  *     plus the node-sized degree table (derived FROM the pin, so the
+  *     caller's edge plan is evaluated exactly once).
   *   - Each HALF-ROUND broadcasts the node-sized score state into the
   *     pinned edges (a broadcast hash join preserves the streamed
   *     side's partitioning — [[PageRank]]'s proven round shape). The
-  *     half-round whose groupBy key IS `pinKey` aggregates entirely
-  *     in place — one stage, zero shuffle; the other half-round's
-  *     groupBy moves only map-side-combined partials, bounded by
-  *     partitions × |that side's nodes|, never edge-sized. The raw
+  *     authority half-round aggregates by `v` and moves only map-side-
+  *     combined partials, bounded by partitions × |v nodes|, never
+  *     edge-sized; the hub half-round's groupBy key IS the pin's `u`,
+  *     so it aggregates in place — one stage, zero shuffle. The raw
   *     sum is lineage-cut BEFORE normalization, so the one-row max
-  *     and the normalize join both read the node-sized cut — the
-  *     edge scan happens ONCE per half-round, with zero edge shuffle.
-  *   - `pinKey` should be the side with MORE distinct nodes: its
-  *     half-round is the zero-shuffle one AND the other half-round's
-  *     partial-combine output is bounded by the SMALLER side. For
-  *     g10's customers→suppliers graph that is `u` (the default).
+  *     and the normalize join both read the node-sized cut — the edge
+  *     scan happens ONCE per half-round, with zero edge shuffle. `u`
+  *     should be the side with MORE distinct nodes (g10 orients its
+  *     customers→suppliers edges that way).
   *
   * The broadcast state is node-sized, so past `broadcastScoreMax`
   * nodes (default 32M ≈ 1-2 GB of broadcast relation, [[PageRank]]'s
-  * `broadcastRankMax` doctrine) the loop falls back to the r13
-  * shuffle shape: edge⋈score sort-merge joins against one or two
-  * pre-partitioned edge pins (`dualEdgePin` picks — two pins mean no
-  * round ever reshuffles edges, break-even ≈ 4-5 rounds, GROWTH_r10).
-  * Results are IDENTICAL across all three layouts (same joins, same
-  * arithmetic) — spec-pinned bit-identical in HitsSpec.
+  * `broadcastRankMax` doctrine) the same loop runs the r13 shuffle
+  * shape: edge⋈score sort-merge joins against the same u-keyed pin,
+  * whose h-half-round reshuffles it on `v`, with the raw sums left
+  * uncut (the SMJ sum is re-read by normalize instead). Results are
+  * IDENTICAL in both shapes (same joins, same arithmetic) —
+  * spec-pinned bit-identical in HitsSpec.
+  *
+  * Settled layout arms, removed: a second v-keyed fallback pin
+  * (GROWTH_r10/SCALE.md §g10 at sf10, 2 rounds: single pin 211 s vs
+  * dual 255 s, break-even ≈ 4-5 rounds), a v-keyed broadcast pin, and
+  * handing normalize the uncut broadcast sum (GROWTH_r16
+  * `g10_cutRawSums`: parity at sf0.1 and sf10).
   *
   * Score state is checkpointed per half-round (constant-size plans).
   * Lineage cuts follow the [[ConnectedComponents]] contract via
@@ -77,55 +80,21 @@ object Hits {
     *              deltas per round; 16 bytes of driver metadata).
     *              Spec-pinned: tol=0 ≡ fixed rounds, tol runs return
     *              their stopping round's fixed-round state exactly.
-    * @param dualEdgePin FALLBACK-mode layout knob (shuffle shape only;
-    *              broadcast mode always uses one pin). true =
-    *              checkpoint TWO pre-partitioned edge copies, one per
-    *              alternating join key, so no round ever reshuffles
-    *              the edge list. false = pin only the u-keyed copy and
-    *              let each h-round's join reshuffle it on `v` — halves
-    *              setup materialization at the price of one edge-sized
-    *              shuffle per round. GROWTH_r10 measured both arms at
-    *              sf10 (58.7M edges, 2 rounds, min-of-3): single
-    *              211.1 s vs dual 255.1 s — break-even ≈ 4-5 rounds.
-    *              Results IDENTICAL either way (spec-pinned).
-    * @param pinKey "u" (default) or "v": the edge pin's partitioning
-    *              key in broadcast mode. Pick the side with MORE
-    *              distinct nodes (scaladoc above). Fallback mode
-    *              ignores it (its pins are keyed by join side).
     * @param broadcastScoreMax node-count ceiling for the zero-edge-
     *              shuffle broadcast round shape; past it the loop uses
     *              the r13 shuffle shape. 0 forces the fallback (the
     *              spec's equivalence knob).
-    * @param cutRawSums broadcast-mode layout knob (round 16, the r14
-    *              "accepted trade" made measurable both ways): true
-    *              (default) = lineage-cut each half-round's raw sum so
-    *              normalize's max subquery and outer join read blocks
-    *              — two node-sized cut writes per round, edge pin
-    *              scanned once per half-round. false = hand normalize
-    *              the uncut sum; the max subquery and the join each
-    *              re-evaluate the broadcast-join+partial-agg over the
-    *              edge pin (2 pin scans per half-round, zero cut
-    *              writes) — the small-graph mode SCALE.md named, where
-    *              the ~constant cut cost dominates a ~3 s query.
-    *              Results IDENTICAL either way (deterministic sum;
-    *              spec-pinned). Fallback mode ignores it (its sums are
-    *              edge-sized SMJs — never re-evaluate those twice).
     * @return columns `node`, `hub_e6`, `auth_e6` for every node
     *         appearing in the edge list (either side) */
   def scores(edges: DataFrame, iterations: Int,
       checkpointDir: Option[String] = None,
       tol: Long = 0L,
-      dualEdgePin: Boolean = true,
-      pinKey: String = "u",
-      broadcastScoreMax: Long = 32000000L,
-      cutRawSums: Boolean = true): DataFrame = {
+      broadcastScoreMax: Long = 32000000L): DataFrame = {
     // core-tied round layout (see [[RoundLayout]]): node-sized
     // per-round state must not inherit a corpus-derived session
     // partition count -- measured at sf10 in GROWTH_r10
     RoundLayout.coreTied(edges.sparkSession) {
       require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
-      require(pinKey == "u" || pinKey == "v",
-        s"pinKey must be 'u' or 'v' (got '$pinKey')")
       // TWO rotations (see [[LineageCut]]): score STATES rotate through
       // the r13 window — h/a interleave through one keep=2 FIFO (a(n-1)
       // is released when a(n) cuts, by which point h(n-1..n) were
@@ -140,11 +109,9 @@ object Hits {
         keep = if (tol > 0L) 3 else 2)
       val lcSum = new LineageCut(checkpointDir, keep = 1)
       val e = edges.select(col("u"), col("v"))
-      // the ONE edge pin, pre-partitioned on pinKey; the caller's edge
-      // plan is evaluated exactly once, into this cut. Fallback mode
-      // derives its own key-specific pins FROM it (checkpoint-to-
-      // checkpoint repartitions, never a second caller-plan run).
-      val pinned = lc.pin(e.repartition(col(pinKey)))
+      // the ONE edge pin, pre-partitioned on u; the caller's edge plan
+      // is evaluated exactly once, into this cut
+      val pinned = lc.pin(e.repartition(col("u")))
       // node set and total degree (in+out, bag union) come from ONE
       // grouped aggregate over the checkpointed copy — the count rides
       // the same shuffle the distinct node set needs anyway, so the
@@ -183,16 +150,16 @@ object Hits {
       // OTHER side. Broadcast mode: BHJ of the node-sized state into
       // the pin (partitioning-preserving, zero edge shuffle; the
       // groupBy either reuses the pin's partitioning outright or moves
-      // map-side-combined partials). Fallback: the r13 edge⋈score SMJ.
-      def sumInto(ed: DataFrame, state: DataFrame, stateCol: String,
+      // map-side-combined partials), lineage-cut so normalize reads it
+      // from blocks. Fallback: the r13 edge⋈score SMJ, uncut.
+      def rawSum(state: DataFrame, stateCol: String,
           joinKey: String, groupKey: String): DataFrame = {
         val s = state.select(col("node").as(joinKey), col(stateCol))
-        val joined =
-          if (bcast) ed.join(broadcast(s), joinKey)
-          else ed.join(s, joinKey)
-        joined.groupBy(col(groupKey))
+        val raw = pinned.join(if (bcast) broadcast(s) else s, joinKey)
+          .groupBy(col(groupKey))
           .agg(sum(stateCol).as("s"))
           .select(col(groupKey).as("node"), col("s"))
+        if (bcast) lcSum(raw) else raw
       }
       // normalize a raw sum to (1e6 · s) div max(s) over the full node
       // set (nodes absent from the sum score 0). The one-row max
@@ -211,52 +178,22 @@ object Hits {
             expr("CAST((1000000 * coalesce(s, 0L)) div m AS BIGINT)")
               .as(outCol)))
       }
-      if (bcast) {
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val (hPrev, aPrev) = (h, a)
-          def maybeCut(raw: DataFrame): DataFrame =
-            if (cutRawSums) lcSum(raw) else raw
-          val asum = maybeCut(sumInto(pinned, h, "h", "u", "v"))
-          a = normalize(asum, "a")
-          // Δa must read a(n-1) HERE, before the h-half-round's cut
-          // rotates it out of the keep=3 window
-          val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
-          val hsum = maybeCut(sumInto(pinned, a, "a", "v", "u"))
-          h = normalize(hsum, "h")
-          if (tol > 0L)
-            converged = dA <= tol && delta(h, hPrev, "h") <= tol
-          i += 1
-        }
-      } else {
-        // ── r13 shuffle fallback (node count above broadcastScoreMax):
-        // edge⋈score SMJs against per-key edge pins; both derived from
-        // `pinned`, so repartitions read checkpointed blocks
-        val eByU = if (pinKey == "u") pinned
-          else lc.pin(pinned.repartition(col("u")))
-        val eByV =
-          if (dualEdgePin)
-            (if (pinKey == "v") pinned
-             else lc.pin(eByU.repartition(col("v"))))
-          else eByU
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val (hPrev, aPrev) = (h, a)
-          // both a and h are cut per round: skipping a's cut was
-          // measured SLOWER (sf0.1, warm min 5.9 s vs 3.8 s) because
-          // the max broadcast subquery and the normalize join then each
-          // re-evaluate the edge-sized sum aggregate
-          val asum = sumInto(eByU, h, "h", "u", "v")
-          a = normalize(asum, "a")
-          val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
-          val hsum = sumInto(eByV, a, "a", "v", "u")
-          h = normalize(hsum, "h")
-          if (tol > 0L)
-            converged = dA <= tol && delta(h, hPrev, "h") <= tol
-          i += 1
-        }
+      // both a and h are cut per half-round by normalize: skipping a's
+      // cut was measured SLOWER in the shuffle shape (sf0.1, warm min
+      // 5.9 s vs 3.8 s) because the max broadcast subquery and the
+      // normalize join then each re-evaluate the edge-sized sum
+      var i = 0
+      var converged = false
+      while (i < iterations && !converged) {
+        val (hPrev, aPrev) = (h, a)
+        a = normalize(rawSum(h, "h", "u", "v"), "a")
+        // Δa must read a(n-1) HERE, before the h-half-round's cut
+        // rotates it out of the keep=3 window
+        val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
+        h = normalize(rawSum(a, "a", "v", "u"), "h")
+        if (tol > 0L)
+          converged = dA <= tol && delta(h, hPrev, "h") <= tol
+        i += 1
       }
       h.join(a, "node")
         .select(col("node"), col("h").as("hub_e6"), col("a").as("auth_e6"))

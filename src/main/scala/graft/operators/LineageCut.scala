@@ -50,9 +50,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   * which cuts WITHOUT enrolling in the rotation.
   */
 object LineageCut {
-  private val envOverrideLogged =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** Reliable-mode observability (round 13 PageRank, shared round 14):
     * announce a just-cut round state's checkpoint FILE on stderr so an
     * external supervisor can resume from the last completed round
@@ -80,31 +77,9 @@ object LineageCut {
       }
 }
 
-final class LineageCut(checkpointDirOpt: Option[String], keep: Int = 2) {
+final class LineageCut(checkpointDir: Option[String], keep: Int = 2) {
   require(keep >= 1, "LineageCut must keep at least one generation")
   private val live = scala.collection.mutable.Queue.empty[RDD[_]]
-
-  // MEASUREMENT-ONLY escape (round 12, like RoundLayout's
-  // SPARK_GRAFT_NO_CORE_TIED): SPARK_GRAFT_CHECKPOINT_DIR flips every
-  // engine in a run to reliable-checkpoint mode without threading a
-  // parameter through 9 query builders — the knob the sf10
-  // reliable-checkpoint-tax arms need. Production callers pass
-  // checkpointDir explicitly; an explicit Some always wins.
-  private val checkpointDir: Option[String] =
-    checkpointDirOpt.orElse {
-      val env = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      // log ONCE per JVM when the override is live (round-13 advice):
-      // a stale exported variable silently flips every engine to
-      // reliable-checkpoint semantics — arm provenance must be visible
-      // in run output, like the other measurement escapes
-      env.foreach { d =>
-        if (LineageCut.envOverrideLogged.compareAndSet(false, true))
-          System.err.println("[lineagecut] SPARK_GRAFT_CHECKPOINT_DIR=" +
-            d + " active: ALL lineage cuts in this JVM use RELIABLE " +
-            "checkpoints (measurement escape, writes checkpoint dirs)")
-      }
-      env
-    }
 
   private def cutOnly(df: DataFrame): DataFrame = {
     checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)

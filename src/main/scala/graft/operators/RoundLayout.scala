@@ -46,20 +46,10 @@ import org.apache.spark.sql.SparkSession
   * documented single-threaded-per-session assumption.
   */
 object RoundLayout {
-  /** MEASUREMENT-ONLY escape hatch: `SPARK_GRAFT_NO_CORE_TIED=1` makes
-    * this wrapper a no-op, so the engines run under the caller's
-    * session layout — the "def" arm of the layout A/B experiments
-    * (tools/growth_exp.py). g01 was the doctrine's one mild
-    * counter-reading at sf10 (213.6 def vs 225.6 ct, within arm
-    * spread); this knob lets the interleaved-arm re-measure compare
-    * the two configs on the SAME binary instead of patching code
-    * between arms. Never set it in production paths. */
-  def coreTied[T](spark: SparkSession)(body: => T): T =
-    if (sys.env.get("SPARK_GRAFT_NO_CORE_TIED").contains("1")) body
-    else {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
-      try body finally spark.conf.set(key, prev)
-    }
+  def coreTied[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }

@@ -654,21 +654,8 @@ object GraphPack extends QueryPack {
         // half-round with zero edge shuffle (IterProbe sf10: marginal
         // shuffle 2.3 GB/round → node-sized; see Hits scaladoc).
         // ~1.6M nodes at sf10 ≪ broadcastScoreMax=32M, so the query
-        // never falls back. SPARK_GRAFT_HITS_DUAL_PIN=1 maps to the
-        // FALLBACK's dual-pin layout, kept for shuffle-shape
-        // experiments (force with SPARK_GRAFT_HITS_FALLBACK=1).
-        // SPARK_GRAFT_HITS_NO_SUMCUT=1 = the uncut-raw-sums small-graph
-        // mode (measurement escape for the r14 cut-vs-rescan trade;
-        // results identical, see Hits.cutRawSums scaladoc + the r16
-        // sf10/sf0.1 A/B in OPTIMIZATION_r16.md)
-        graft.operators.Hits.scores(edges, 2,
-          dualEdgePin = sys.env.get("SPARK_GRAFT_HITS_DUAL_PIN")
-            .contains("1"),
-          broadcastScoreMax =
-            if (sys.env.get("SPARK_GRAFT_HITS_FALLBACK").contains("1")) 0L
-            else 32000000L,
-          cutRawSums = !sys.env.get("SPARK_GRAFT_HITS_NO_SUMCUT")
-            .contains("1")).orderBy("node")
+        // never falls back.
+        graft.operators.Hits.scores(edges, 2).orderBy("node")
       },
       oracle = Some {
         def round(hPrev: String, i: Int): String =

@@ -87,4 +87,31 @@ class MapReducePropertySpec extends AnyFunSuite {
         .foreach { case (k, n) => assert(n === 1, s"key $k split across partitions") }
     }
   }
+
+  test("line orderings equal unsigned UTF-8 byte order over all Unicode scalar values") {
+    // every range a line can hold ('\n' ends a line), weighted so a
+    // surrogate pair often meets U+E000–U+FFFF at the first mismatch:
+    // the case where UTF-16 code-unit order and byte order disagree
+    val codePoint = Gen.frequency(3 -> Gen.oneOf(0x09, 0x0b, 0x20, 0x41),
+      2 -> Gen.choose(0, 0x7f).suchThat(_ != 0x0a),
+      1 -> Gen.choose(0x80, 0xd7ff), 3 -> Gen.choose(0xe000, 0xffff),
+      3 -> Gen.choose(0x10000, 0x10ffff))
+    val line = Gen.choose(0, 3).flatMap(Gen.listOfN(_, codePoint))
+      .map(cps => new String(cps.toArray, 0, cps.size))
+    val pair = for (p <- line; a <- line; b <- line) yield (p + a, p + b)
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    def agrees(ord: Ordering[String], a: String, b: String,
+        bytes: String => Array[Byte]): Boolean =
+      Integer.signum(ord.compare(a, b)) ==
+        Integer.signum(java.util.Arrays.compareUnsigned(bytes(a), bytes(b)))
+    val prop = Prop.forAll(pair) { case (a, b) =>
+      agrees(Md5Partitioner.codePointOrdering, a, b, utf8) &&
+        agrees(Md5Partitioner.rawNewlineOrdering, a, b, l => utf8(l + "\n"))
+    }
+    val result = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(5000).withInitialSeed(Seed(42L)), prop)
+    assert(result.passed, result.status)
+    // the defect's own example: U+FF01 sorts before U+1F600 in bytes
+    assert(Md5Partitioner.codePointOrdering.compare("\uFF01", "\uD83D\uDE00") < 0)
+  }
 }

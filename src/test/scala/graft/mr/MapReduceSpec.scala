@@ -196,6 +196,29 @@ class MapReduceJobSpec extends AnyFunSuite {
     assert(parts.values.flatten.toSet === lines.toSet)
   }
 
+  test("part files are in LC_ALL=C sort order, characters above U+FFFF too") {
+    // U+FF01 vs U+1F600: UTF-16 code-unit order puts the emoji (a
+    // surrogate pair) first, UTF-8 byte order and `sort` put it last
+    val lines = Seq("\uFF01", "\uD83D\uDE00", "\uE000x", "\uD800\uDC00",
+      "\uFFFD\t1", "a", "a\tb", "\u00E9", "\u4E2D", "\uD83D\uDE00\t2",
+      "\uFF21", "z\uD83D\uDE00", "z\uFF01", "z")
+    val in = tmpDir("mr-in-cp")
+    writeFile(in, "f.txt", lines.mkString("", "\n", "\n"))
+    val exeDir = tmpDir("mr-exe-cp")
+    val out = tmpDir("mr-out-cp")
+    val cat = writeExe(exeDir, "cat.sh", "#!/bin/sh\ncat\n")
+    MapReduceJob.runExe(spark, in.toString, out.toString, cat, cat,
+      numMappers = 1, numReducers = 1)
+
+    val sorted = exeDir.resolve("sorted.txt")
+    val sort = new ProcessBuilder("sort", in.resolve("f.txt").toString)
+      .redirectOutput(sorted.toFile)
+    sort.environment().put("LC_ALL", "C")
+    assert(sort.start().waitFor() === 0)
+    val expected = Files.readAllLines(sorted, StandardCharsets.UTF_8).asScala
+    assert(readPartFiles(out)("part-00000") === expected.toSeq)
+  }
+
   test("empty input dir yields empty part files, not a crash") {
     // the reference crashes on empty map tasks (worker/__main__.py:122-151
     // runs `sort` on never-created files); we must not (SURVEY §2.1).

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Same-minute interleaved N-tree A/B for ONE query (round 16).
 
-ab_query.py generalized from two arms to N named (tag, tree) arms: one
+A two-tree single-query A/B generalized to N named (tag, tree) arms: one
 fresh JVM per (tree, rep), rep-major interleave, ladder methodology
-(SPARK_GRAFT_CPUS=8 unless overridden, 64g heap, in-row contention
-probe). Motivation: verdict item 2's s09 question is THREE-cornered —
+(this host's cores unless --cpus overrides, host_heap(), in-row
+contention probe). Motivation: verdict item 2's s09 question is THREE-cornered —
 r14 window formulation vs r15 interpreted-HOF map-side vs r16 codegen
 kernel — and two pairwise A/Bs an hour apart cannot rank three arms
 under one weather.
@@ -29,7 +29,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
-from ladder import JDK17_ADD_OPENS, settle_load  # noqa: E402
+from ladder import JDK17_ADD_OPENS, host_cpus, host_heap, settle_load  # noqa: E402
 
 
 def run_once(tree, vdir, sf_dir, query, cpus):
@@ -37,7 +37,7 @@ def run_once(tree, vdir, sf_dir, query, cpus):
     env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
     cmd = (["java"] + JDK17_ADD_OPENS +
            ["-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC", "-Xmx64g",
+            "-Dspark.sql.session.timeZone=UTC", f"-Xmx{host_heap()}",
             "-cp", f"{tree}/target/scala-2.13/classes:/opt/spark/jars/*",
             "graft.Verify", sf_dir, vdir, query])
     subprocess.run(cmd, cwd=REPO, check=True, env=env,
@@ -72,7 +72,7 @@ def main():
     reps = int(opt("--reps", "3"))
     sf_dir = opt("--sfdir", "/root/testdata/sf0.1")
     artifact = opt("--artifact", "GROWTH_r16.json")
-    cpus = opt("--cpus", "8")
+    cpus = opt("--cpus", host_cpus())
     query = argv[0]
     arms = [a.split("=", 1) for a in argv[1:]]
     prefix = query.split("_")[0]
@@ -104,7 +104,7 @@ def main():
         ws = sorted(walls[tag])
         data["arms"][f"{prefix}_{tag}"] = {
             "query": query, "tree": str(tree), "cpus": int(cpus),
-            "dir": sf_dir, "driver_mem": "64g",
+            "dir": sf_dir, "driver_mem": host_heap(),
             "walls_sec": walls[tag], "min_sec": ws[0],
             "median_sec": ws[len(ws) // 2],
             "par_over_scalar_all": probes[tag],

@@ -39,7 +39,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
-from ladder import JDK17_ADD_OPENS  # noqa: E402
+from ladder import JDK17_ADD_OPENS, host_cpus, host_heap  # noqa: E402
 
 def round_re(tag):
     return re.compile(r"\[%s\] round (\d+) complete: (\S+)" % tag)
@@ -48,7 +48,7 @@ def round_re(tag):
 def jvm_cmd(*drill_args):
     return (["java"] + JDK17_ADD_OPENS +
             ["-Dspark.ui.enabled=false",
-             "-Dspark.sql.session.timeZone=UTC", "-Xmx64g",
+             "-Dspark.sql.session.timeZone=UTC", f"-Xmx{host_heap()}",
              "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
              "graft.PreemptDrill"] + list(drill_args))
 
@@ -63,7 +63,7 @@ def main():
     prefix = "" if engine == "g01" else "cc_"
     subprocess.run(["rm", "-rf", str(work)])
     work.mkdir(parents=True)
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, SPARK_GRAFT_CPUS=host_cpus())
 
     # ── cold reference ────────────────────────────────────────────────
     t0 = time.time()

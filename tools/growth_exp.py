@@ -22,12 +22,13 @@ Round 11:
     the class-vs-source staleness guard, falling back to sbt).
 
 Usage: python3 tools/growth_exp.py <round> [reps] [out.json]
-                                   [--arms tag=query:parts,...]
+                                   --arms tag=query:parts,...
                                    [--dir /tmp/sf1]
-Default arms are in ARMS below; --arms overrides them (parts "def"
-= leave the knob unset, i.e. Verify's data-derived default). An
-optional trailing :KEY=VAL per arm is passed into that arm's
-environment (e.g. SPARK_GRAFT_NO_CORE_TIED=1). The artifact is merged
+Each arm is tag=query:parts (parts "def" = leave the knob unset,
+i.e. Verify's data-derived default). An optional trailing :KEY=VAL per
+arm is passed into that arm's environment (e.g. SPARK_GRAFT_CPUS=1 for
+a core-scaling arm). Arms run on this host's cores and host_heap()
+unless an arm overrides SPARK_GRAFT_CPUS. The artifact is merged
 arm-by-arm into an existing out.json so the experiment can be
 extended across runs without losing readings.
 """
@@ -37,23 +38,10 @@ import sys
 import time
 from pathlib import Path
 
-from ladder import run_verify, settle_load
+from ladder import host_cpus, host_heap, run_verify, settle_load
 
 REPO = Path(__file__).resolve().parent.parent
 SF10 = "/tmp/sf10"
-
-# (tag, query, shuffle_partitions_or_None_for_default[, extra_env])
-# round 11 default arms: the g01 core-tied vs session-layout A/B —
-# the one engine where the r10 doctrine measured mildly backwards
-# (213.6 def vs 225.6 ct, inside arm spread). "def" here means the
-# engines still run core-tied (production path); the NO_CORE_TIED arm
-# is the measurement-only escape in operators/RoundLayout.scala.
-ARMS = [
-    ("g01_ct", "g01_pagerank", None),
-    ("g01_def", "g01_pagerank", None,
-     {"SPARK_GRAFT_NO_CORE_TIED": "1"}),
-]
-
 
 def run_once(query, parts, out_dir, sf_dir=SF10, extra_env=None):
     saved = {}
@@ -62,11 +50,11 @@ def run_once(query, parts, out_dir, sf_dir=SF10, extra_env=None):
         knobs = {"SPARK_GRAFT_SHUFFLE_PARTITIONS": parts} if parts else {}
         if extra_env:
             knobs.update(extra_env)
-        # round 16 (verdict item 3): an arm may override the core count
-        # (the sf1 8-vs-32-core scaling rung) — run_verify's explicit
-        # cpus kwarg wins over os.environ, so thread it through rather
-        # than letting the default 8 clobber the arm's intent
-        cpus = knobs.pop("SPARK_GRAFT_CPUS", "8")
+        # an arm may override the core count (a core-scaling rung) —
+        # run_verify's explicit cpus kwarg wins over os.environ, so
+        # thread it through rather than letting the host default
+        # clobber the arm's intent
+        cpus = knobs.pop("SPARK_GRAFT_CPUS", host_cpus())
         for k, v in knobs.items():
             saved[k] = os.environ.get(k)
             os.environ[k] = v
@@ -77,7 +65,7 @@ def run_once(query, parts, out_dir, sf_dir=SF10, extra_env=None):
         # runs anyway and its in-row probe adjudicates.
         settle_load(2.0, 600)
         t0 = time.time()
-        run_verify(sf_dir, out_dir, query, cpus=cpus, mem="64g")
+        run_verify(sf_dir, out_dir, query, cpus=cpus)
         wall = round(time.time() - t0, 1)
     finally:
         for k, v in saved.items():
@@ -93,7 +81,7 @@ def run_once(query, parts, out_dir, sf_dir=SF10, extra_env=None):
 def parse_arms(spec):
     # tag=query:parts[:KEY=VAL] - parts "def" leaves the knob unset
     # (Verify's data-derived default); an optional trailing KEY=VAL is
-    # passed into the arm's environment (e.g. the core-tied opt-out)
+    # passed into the arm's environment (e.g. a core-count override)
     arms = []
     for item in spec.split(","):
         tag, rhs = item.split("=", 1)
@@ -109,11 +97,11 @@ def parse_arms(spec):
 
 def main():
     argv = list(sys.argv[1:])
-    arm_list = ARMS
-    if "--arms" in argv:
-        i = argv.index("--arms")
-        arm_list = parse_arms(argv[i + 1])
-        del argv[i:i + 2]
+    if "--arms" not in argv:
+        sys.exit(__doc__)
+    i = argv.index("--arms")
+    arm_list = parse_arms(argv[i + 1])
+    del argv[i:i + 2]
     sf_dir = SF10
     if "--dir" in argv:
         i = argv.index("--dir")
@@ -129,25 +117,24 @@ def main():
     probes = {}  # tag -> list of par_over_scalar, run order
 
     def write_artifact():
-        for arm in arm_list:
-            tag, query, parts = arm[0], arm[1], arm[2]
-            extra_env = arm[3] if len(arm) > 3 else None
+        for tag, query, parts, extra_env in arm_list:
             if not walls.get(tag):
                 continue
             ws = sorted(walls[tag])
             arms[tag] = {
                 "query": query,
-                "cpus": int((extra_env or {}).get("SPARK_GRAFT_CPUS", 8)),
+                "cpus": int((extra_env or {}).get("SPARK_GRAFT_CPUS",
+                                                  host_cpus())),
                 "shuffle_partitions":
                     int(parts) if parts else "data-derived",
                 "extra_env": extra_env,
-                "driver_mem": "64g", "dir": sf_dir,
+                "driver_mem": host_heap(), "dir": sf_dir,
                 "walls_sec": walls[tag], "min_sec": ws[0],
                 "median_sec": ws[len(ws) // 2],
                 "par_over_scalar_all": probes[tag],
             }
         # preserve any other top-level keys an earlier tool wrote into
-        # the shared artifact (round 16: ab_capped_derivation's notes)
+        # the shared artifact (GROWTH_r16 carries such notes)
         base = (json.loads(out_path.read_text())
                 if out_path.exists() else {})
         base.update({"round": int(rnd), "reps": reps, "arms": arms})
@@ -157,9 +144,7 @@ def main():
     # rep-major interleave: every arm's rep k runs before any arm's
     # rep k+1, so the two configs of an A/B see the same weather
     for rep in range(reps):
-        for arm in arm_list:
-            tag, query, parts = arm[0], arm[1], arm[2]
-            extra_env = arm[3] if len(arm) > 3 else None
+        for tag, query, parts, extra_env in arm_list:
             odir = f"/tmp/growth_{tag}_rep{rep}"
             w, pos, total = run_once(query, parts, odir, sf_dir, extra_env)
             walls.setdefault(tag, []).append(w)

@@ -24,9 +24,10 @@ Rungs (round 9 extended the ladder both ways the r8 verdict asked):
            (flattening shuffle-bound vs compounding memory-bound)
            for every query the bench artifact reports.
 
-All rungs run with the same SPARK_GRAFT_CPUS so growth factors are
-comparable; the sf10 rung raises the driver heap instead of the
-thread count.
+All rungs run with the same SPARK_GRAFT_CPUS (this host's cores) and
+heap (host_heap(): SPARK_DRIVER_MEM, else MemTotal/2 clamped to 2-8 g)
+so growth factors are comparable; raise SPARK_DRIVER_MEM for the sf10
+rung on a host that holds it.
 
 Usage: python3 tools/ladder.py <round_number> [out.json] [rungs]
                                [--reps N]
@@ -100,6 +101,26 @@ JDK17_ADD_OPENS = [
 CLASSES = REPO / "target/scala-2.13/classes"
 
 
+def host_cpus():
+    """The cores this process may run on (what `nproc` prints), as a
+    SPARK_GRAFT_CPUS string."""
+    return str(len(os.sched_getaffinity(0)))
+
+
+def host_heap():
+    """SPARK_DRIVER_MEM, else MemTotal/2 in GiB clamped to 2-8 (build.sbt's
+    forked-heap default); 2g where /proc/meminfo is unreadable."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        kib = 0
+    return f"{min(8, max(2, kib // 2097152))}g"
+
+
 def classes_current():
     """True iff the compiled classes are NEWER than every main source —
     the guard that keeps the direct-java fast path from silently
@@ -123,10 +144,9 @@ def classes_current():
     return newest_class >= newest_src
 
 
-def run_verify(sf_dir, out_dir, subset=None, cpus="8", mem=None):
-    env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
-    if mem:
-        env["SPARK_DRIVER_MEM"] = mem
+def run_verify(sf_dir, out_dir, subset=None, cpus=None):
+    env = dict(os.environ, SPARK_GRAFT_CPUS=cpus or host_cpus(),
+               SPARK_DRIVER_MEM=host_heap())
     # a crashed rep must not leave the PREVIOUS rep's per-query files in
     # place for the caller to re-read as this rep's result (round-10
     # advice: with a single-query subset the same qname would be
@@ -148,7 +168,7 @@ def run_verify(sf_dir, out_dir, subset=None, cpus="8", mem=None):
         cmd = (["java"] + JDK17_ADD_OPENS +
                ["-Dspark.ui.enabled=false",
                 "-Dspark.sql.session.timeZone=UTC",
-                f"-Xmx{env.get('SPARK_DRIVER_MEM', '32g')}",
+                f"-Xmx{env['SPARK_DRIVER_MEM']}",
                 "-cp", f"{CLASSES}:/opt/spark/jars/*",
                 "graft.Verify", sf_dir, out_dir])
         if subset:
@@ -192,7 +212,7 @@ def run_stream_once(sf_dir):
                SPARK_GRAFT_STREAM_ONLY="1")
     cmd = (["java"] + JDK17_ADD_OPENS +
            ["-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC", "-Xmx32g",
+            "-Dspark.sql.session.timeZone=UTC", f"-Xmx{host_heap()}",
             "-cp", f"{CLASSES}:/opt/spark/jars/*", "graft.Bench"])
     r = subprocess.run(cmd, cwd=REPO, check=True, env=env,
                        capture_output=True, text=True)
@@ -363,18 +383,19 @@ def main():
     ensure_fixture(SF10, 100)
     rungs = {}
     failed = False
-    for sf_dir, subset, label, mem in [
-            ("/root/testdata/sf0.01", None, "sf0.01", None),
-            ("/root/testdata/sf0.1", "@bench", "sf0.1", None),
-            (SF1, None, "sf1", None),
+    for label, subset in [
+            ("sf0.01", None),
+            ("sf0.1", "@bench"),
+            ("sf1", None),
             # sf1i: the sf10 subset at sf1 under the SAME one-JVM-per-
             # query methodology as sf10, so the sf1→sf10 growth ratio
             # compares like with like (the full-suite sf1 rung's walls
             # carry 219-query shared-session cache effects: d18 reads
             # slower there, s20 warmer). Not run by default — the full
             # sf1 rung already correctness-gates these queries.
-            (SF1, SF10_SUBSET, "sf1i", "64g"),
-            (SF10, SF10_SUBSET, "sf10", "64g")]:
+            ("sf1i", SF10_SUBSET),
+            ("sf10", SF10_SUBSET)]:
+        sf_dir = RUNG_DEFS[label][0]
         if label == "sf1i" and not only:
             continue
         if only and label not in only:
@@ -385,7 +406,7 @@ def main():
         if label in ("sf10", "sf1i"):
             # One fresh JVM PER QUERY. The shared-session run collapsed
             # at this rung (round-9 finding): caches memoized across 11
-            # queries at sf10 scale pushed the 64g heap to its ceiling,
+            # queries at sf10 scale pushed a 64g heap to its ceiling,
             # GC starved the heartbeat thread >178s, and the heartbeat
             # monitor killed the context mid-suite — and every recorded
             # wall was confounded by the previous queries' cache
@@ -403,7 +424,7 @@ def main():
             for rep in range(reps):
                 for qname in subset.split(","):
                     try:
-                        run_verify(sf_dir, vdir, qname, mem=mem)
+                        run_verify(sf_dir, vdir, qname)
                     except subprocess.CalledProcessError:
                         print(f"[ladder] {label}/{qname} rep {rep}: "
                               f"verify FAILED (recorded; continuing)")
@@ -436,7 +457,7 @@ def main():
             Path(vdir, "calibs_all.json").write_text(json.dumps(
                 calibs, indent=1, sort_keys=True))
         else:
-            run_verify(sf_dir, vdir, subset, mem=mem)
+            run_verify(sf_dir, vdir, subset)
         print(f"[ladder] rung {label}: oracle compare ...")
         results, rc = run_check(vdir, sf_dir)
         failed = failed or rc != 0

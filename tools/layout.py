@@ -2,7 +2,8 @@
 """Layout-sensitivity artifact → LAYOUT_r{N}.json (r8 verdict stretch).
 
 The full suite is re-gated under a DIFFERENT physical layout — 3
-shuffle partitions / 3 executor threads instead of the gate's 4 — so
+shuffle partitions / executor threads, one fewer than the gate's
+nproc by default (3 on a 4-core host) — so
 any query whose answer depends on partition count, partition order,
 task scheduling, or tie-breaking by physical row order fails loudly.
 Previously this evidence lived as SCALE.md prose ("219/219 at the
@@ -19,12 +20,15 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+from ladder import host_cpus  # noqa: E402
 
 
 def main():
     rnd = sys.argv[1]
     out = sys.argv[2] if len(sys.argv) > 2 else f"LAYOUT_r{rnd}.json"
-    cpus = sys.argv[3] if len(sys.argv) > 3 else "3"
+    gate_cpus = int(host_cpus())
+    cpus = sys.argv[3] if len(sys.argv) > 3 else str(max(1, gate_cpus - 1))
     sf_dir = "/root/testdata/sf0.01"
     vdir = f"/tmp/layout_cpus{cpus}"
     t0 = time.time()
@@ -41,7 +45,7 @@ def main():
         "round": int(rnd),
         "generated_by": "tools/layout.py",
         "layout": {"cpus": int(cpus), "shuffle_partitions": int(cpus),
-                   "gate_layout_cpus": 4},
+                   "gate_layout_cpus": gate_cpus},
         "n_pass": sum(1 for v in results.values() if v["pass"]),
         "n_fail": sum(1 for v in results.values() if v["pass"] is False),
         "verify_wall_sec": round(time.time() - t0, 1),

@@ -23,13 +23,16 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+from ladder import host_cpus  # noqa: E402
+
 MIN_BASE_BYTES = 1 << 20  # ratios on < 1 MB bases are noise
 
 
-def run_audit(sf_dir, out_path, cpus="8"):
+def run_audit(sf_dir, out_path):
     subprocess.run(
         ["sbt", "-batch", f"runMain graft.ShuffleAudit {sf_dir} {out_path}"],
-        cwd=REPO, check=True, env=dict(os.environ, SPARK_GRAFT_CPUS=cpus))
+        cwd=REPO, check=True, env=dict(os.environ, SPARK_GRAFT_CPUS=host_cpus()))
     return json.loads(Path(out_path).read_text())
 
 
