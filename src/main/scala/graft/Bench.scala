@@ -165,9 +165,7 @@ object Bench {
     // so the per-query min survives any single spike. A query that throws
     // is reported as -1, excluded from the total, and named in "failed" —
     // never silently timed as a fast "success".
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
-    // (pass index, wall sec) per repetition — feeds the normalization
+    // (pass index, wall sec) per repetition, newest first
     val passSamples = scala.collection.mutable
       .Map.empty[String, List[(Int, Double)]].withDefaultValue(Nil)
     (1 to 3).foreach { pass =>
@@ -176,7 +174,6 @@ object Bench {
         try {
           force(name)
           val sec = (System.nanoTime() - t0) / 1e9
-          samples(name) ::= sec
           passSamples(name) ::= (pass, sec)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -218,31 +215,26 @@ object Bench {
       math.max(1.0,
         (probes(pass - 1).parOverScalar + probes(pass).parOverScalar) / 2)
 
-    def summarize(ns: Seq[String]): (Seq[(String, Double)], String, Double) = {
-      val results = ns.map(n => n -> samples(n).minOption.getOrElse(-1.0))
-      val json = results.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      (results, json, results.map(_._2).filter(_ >= 0).sum)
-    }
-    // normalized twin: each repetition divided by ITS pass's factor,
-    // then min — the round-over-round comparison basis when the box
-    // reads contended (see "basis" below)
-    def summarizeNorm(ns: Seq[String])
+    // per query: each repetition divided by its pass's factor, then
+    // min; -1 when every repetition failed. `_ => 1.0` gives the raw
+    // mins, `passFactor` the normalized twin — the round-over-round
+    // comparison basis when the box reads contended (see "basis" below)
+    def summarize(ns: Seq[String], factor: Int => Double)
         : (Seq[(String, Double)], String, Double) = {
       val results = ns.map { n =>
-        val mins = passSamples(n).map { case (p, s) => s / passFactor(p) }
+        val mins = passSamples(n).map { case (p, s) => s / factor(p) }
         n -> (if (mins.isEmpty) -1.0 else mins.min)
       }
       val json = results.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       (results, json, results.map(_._2).filter(_ >= 0).sum)
     }
-    val (res, qs, total) = summarize(names)
-    val (iterRes, iterQs, iterTotal) = summarize(iterNames)
-    val (heavyRes, heavyQs, heavyTotal) = summarize(heavyNames)
-    val (resNorm, qsNorm, totalNorm) = summarizeNorm(names)
-    val (iterResNorm, _, iterTotalNorm) = summarizeNorm(iterNames)
-    val (heavyResNorm, _, heavyTotalNorm) = summarizeNorm(heavyNames)
+    val (res, qs, total) = summarize(names, _ => 1.0)
+    val (iterRes, iterQs, iterTotal) = summarize(iterNames, _ => 1.0)
+    val (heavyRes, heavyQs, heavyTotal) = summarize(heavyNames, _ => 1.0)
+    val (resNorm, qsNorm, totalNorm) = summarize(names, passFactor)
+    val (iterResNorm, _, iterTotalNorm) = summarize(iterNames, passFactor)
+    val (heavyResNorm, _, heavyTotalNorm) = summarize(heavyNames, passFactor)
     // streaming floor THRESHOLD (documented in SCALE.md): the stream
     // path is a correctness-gated but otherwise unmeasured surface —
     // without a floor, a 10x collapse (state-store regression, listing
@@ -295,7 +287,8 @@ object Bench {
     // raw repetitions in chronological order (the list is built by
     // prepending, so reverse) — the spike-visibility field
     val rawJson = allNames.map { n =>
-      "\"" + n + "\":" + samples(n).reverse.mkString("[", ",", "]")
+      "\"" + n + "\":" + passSamples(n).reverse.map(_._2)
+        .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // par_over_scalar is the contention ratio: ≈1 on an idle box (one
     // task per slot, same per-task work as the scalar loop), rising

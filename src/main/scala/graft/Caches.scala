@@ -2,56 +2,114 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-cache registry (round 10): the one place that knows every
-  * pack-level memo so a long-lived session can be swept BETWEEN query
-  * groups instead of accumulating all of them unbounded.
+/** The session-cache registry: the one owner of every piece of
+  * cross-query state a long-lived session accumulates, so nothing is
+  * released behind its back and a session can be swept BETWEEN query
+  * groups instead of holding every memo unbounded.
   *
-  * Why this exists: three packs memoize a materialized relation per
-  * (session, dir) — DedupPack's shingle tables, SimilarityPack's PQ
-  * pipeline, GraphPack's edge relation. Each memo is correct and
-  * individually bounded, but Verify's full-suite mode runs 220 queries
-  * through ONE session, so by the tail of a run every memo is resident
-  * at once. At the sf10 rung that compounding is exactly what collapsed
-  * the shared-session ladder (heap ceiling → GC starved the heartbeat
-  * → context killed mid-suite, round-9 finding); at the sf1 full-suite
-  * rung it silently inflates later groups' walls. The registry makes
-  * the pressure a MANAGED surface: Verify sweeps when the suite crosses
-  * a pack boundary, and the per-group peak is recorded.
+  * PACK MEMOS ([[memo]]). DedupPack's shingle/signature relations and
+  * pair-mass guard, SimilarityPack's PQ index and GraphPack's edge
+  * relation are each built once per (session, pack-scoped key) and
+  * then shared by every query that reads them. Verify's full-suite
+  * mode runs 220 queries through ONE session, so without a sweep every
+  * memo is resident at once by the tail of a run — at the sf10 rung
+  * that compounding collapsed the shared-session ladder (heap ceiling
+  * → GC starved the heartbeat → context killed mid-suite, round 9).
+  * Verify sweeps when the suite crosses a pack boundary and records
+  * the per-group peak.
   *
-  * Sweep semantics are each pack's own `clear` contract. NOTE the
-  * asymmetry (GraphPack.clear scaladoc): Dedup/Similarity relations are
-  * persist-backed and transparently recompute after a sweep, but the
-  * graph edge memo is a localCheckpoint — a sweep INVALIDATES any
-  * still-held DataFrame derived from it. Verify requests each query's
-  * DataFrame fresh after every sweep, so the contract holds there;
-  * other long-lived callers must do the same.
+  * One release rule covers every memo: each DataFrame in the value is
+  * unpersisted (once no other entry shares its cache — see
+  * [[release]]) and its backing checkpoint RDD released; anything else
+  * (a guard's Long) is simply dropped. NOTE the persist-vs-checkpoint
+  * asymmetry this rule hides: persist-backed memos (the shingle and
+  * signature relations) transparently recompute after a sweep, but a
+  * `localCheckpoint` memo (the edge relation, the PQ index) truncates
+  * lineage — a sweep INVALIDATES any still-held DataFrame derived from
+  * it, which THROWS on its next action instead of recomputing. Verify
+  * requests each query's DataFrame fresh after every sweep, so the
+  * contract holds there; other long-lived callers must do the same.
   *
-  * Round 12 adds the TRANSIENT registry — ownership-aware per-QUERY
-  * reclamation, the granularity SHARED_r11 proved pack-boundary sweeps
-  * cannot reach. An iterative engine call leaves behind its final
-  * `keep` [[graft.operators.LineageCut]] generations plus every
+  * TRANSIENT CUTS ([[track]], [[strayUnpersist]]) are the per-QUERY
+  * granularity SHARED_r11 proved pack-boundary sweeps cannot reach. An
+  * iterative engine call leaves behind its final `keep`
+  * [[graft.operators.LineageCut]] generations plus every
   * [[graft.operators.LineageCut.pin]]ned setup relation (edge-SIZED
   * localCheckpoints); within one pack, eleven graph queries each leak
   * one such set, and the r11 shared-session sf10 sweep arm OOM'd
   * in-pack — the boundary sweep never got a chance to run. Every cut
-  * is now registered here at creation and deregistered when the
-  * rotation itself releases it, so [[strayUnpersist]] can drop exactly
-  * the cuts no rotation will ever release — after the query's result
-  * is written — without touching the pack memos (which are owned by
-  * their packs, not enrolled here).
+  * is registered at creation and deregistered when the rotation itself
+  * releases it, so [[strayUnpersist]] drops exactly the cuts no
+  * rotation will ever release, after the query's result is written.
+  *
+  * The two sets are KEPT APART: memos are never enrolled as
+  * transients, so a per-query reclaim never touches a memo, and a
+  * sweep never touches a cut.
   */
 object Caches {
 
-  /** Unpin every pack-level memo held for `session`. Safe to call at
-    * any query-group boundary; the next consumer re-derives. */
-  def sweep(session: SparkSession): Unit = {
-    queries.DedupPack.clear(session)
-    queries.SimilarityPack.clear(session)
-    queries.GraphPack.clear(session)
+  // ---- pack memos ----------------------------------------------------
+  // Keyed by (session, pack-scoped key). SparkSession does not override
+  // equals, so sessions compare by reference: `spark.newSession()` gets
+  // its own entries. The value type is fixed per key by its one caller.
+  private val memos =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Any]
+
+  /** The value memoized for (`session`, `key`), building it on first
+    * request. `key` is pack-scoped (`"graph.edges:" + dir`). Build,
+    * then putIfAbsent — NOT TrieMap.getOrElseUpdate, which is not
+    * atomic over its build function: two threads racing here would both
+    * materialize, and the loser's blocks would leak for the session
+    * lifetime. The losing build is released instead. */
+  def memo[T](session: SparkSession, key: String)(build: => T): T =
+    memos.get((session, key)) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val built = build
+        memos.putIfAbsent((session, key), built) match {
+          case Some(winner) =>
+            release(session, key, built); winner.asInstanceOf[T]
+          case None => built
+        }
+    }
+
+  /** Release every memo held for `session`; other sessions' entries
+    * are untouched. Safe at any query-group boundary: the next
+    * consumer re-derives (see the class note on checkpoint memos). */
+  def sweep(session: SparkSession): Unit = synchronized {
+    memos.keys.filter(_._1 eq session).foreach { k =>
+      memos.remove(k).foreach(release(session, k._2, _))
+    }
   }
+
+  /** The memo release rule. A checkpoint RDD belongs to the one build
+    * that made it and is always released. Persisted blocks are NOT
+    * per build: Spark's CacheManager is shared by every session of a
+    * context and keys cached data by plan, so every live entry for the
+    * same key on the same context reads the same cache entry — the
+    * unpersist waits for the last of them (a losing build's twin, or
+    * another session's copy). */
+  private def release(session: SparkSession, key: String, value: Any): Unit = {
+    val shared = memos.keys.exists { case (s, k) =>
+      k == key && (s.sparkContext eq session.sparkContext)
+    }
+    def drop(v: Any): Unit = v match {
+      case df: Dataset[_] =>
+        if (!shared) df.unpersist(blocking = true)
+        checkpointRdd(df).foreach(releaseRdd(_, blocking = true))
+      case p: Product => p.productIterator.foreach(drop)
+      case _ => ()
+    }
+    drop(value)
+  }
+
+  /** The RDD behind a checkpointed DataFrame: the first [[LogicalRDD]]
+    * in its analyzed plan, if any. */
+  def checkpointRdd(df: Dataset[_]): Option[RDD[_]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
 
   // ---- transient-cut ownership (round 12) --------------------------
   // Keyed by SparkContext (persistence is context-level). RDD does not
@@ -92,8 +150,7 @@ object Caches {
     * in-query scaffolding cuts (`Caches.trackCut(df.localCheckpoint(
     * true))`). No-op if the plan is not a checkpoint LogicalRDD. */
   def trackCut(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l.rdd }.foreach(track)
+    checkpointRdd(df).foreach(track)
     df
   }
 

@@ -146,60 +146,8 @@ object IterProbe {
               .minLabel(pinned, maxIterations = r)
               .queryExecution.toRdd.count()
           }
-      case "kcore" =>
-        // g05's peel loop UNROLLED with per-round attribution (round
-        // 12, r11 verdict item 1: the 423-525 s sf10 wall was measured
-        // whole — nobody knew whether the cascade is long with
-        // near-empty tail rounds or the per-round joins are the cost).
-        // Per round it times (a) the keep-set derivation alone (degree
-        // agg + filter — forced separately, so the join timing below
-        // re-pays it; subtract when reading) and (b) the full peel step
-        // (two semi-joins + repartition + eager cut), and prints edges
-        // remaining + nodes dropped — the cascade-shape numbers.
-        val k = 8 // g05's k
-        val e0 = baseEdges()
-        val edges = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-        operators.RoundLayout.coreTied(spark) {
-          val lc = new operators.LineageCut(None)
-          var cur = lc(edges.select(col("u"), col("v"))
-            .repartition(col("u")))
-          var nEdges = cur.count()
-          println(s"[iterprobe] kcore setup: $nEdges edges")
-          var nNodes = -1L
-          var round = 0
-          var stable = nEdges == 0
-          while (!stable && round < maxRounds) {
-            val keep = cur.groupBy("u").agg(count(lit(1)).as("deg"))
-              .filter(col("deg") >= k).select("u")
-            timed(s"kcore round=$round keep-derivation") {
-              val kc = keep.count()
-              val dropped = if (nNodes >= 0) nNodes - kc else -1
-              println(s"[iterprobe] kcore round=$round keep=$kc" +
-                s" dropped=$dropped")
-              nNodes = kc
-              kc
-            }
-            var n2 = 0L
-            timed(s"kcore round=$round peel-step") {
-              val next = lc(cur
-                .join(keep, Seq("u"), "left_semi")
-                .join(keep.withColumnRenamed("u", "v"), Seq("v"),
-                  "left_semi")
-                .select(col("u"), col("v")).repartition(col("u")))
-              n2 = next.count()
-              cur = next
-              n2
-            }
-            stable = n2 == nEdges
-            nEdges = n2
-            round += 1
-          }
-          println(s"[iterprobe] kcore converged after $round rounds " +
-            s"($nEdges edges remain)")
-        }
-        Caches.strayUnpersist(spark)
       case other =>
-        sys.error(s"unknown engine '$other' (pagerank|hits|cc|kcore)")
+        sys.error(s"unknown engine '$other' (edges|pagerank|hits|cc)")
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Driver-restart recovery for the iterative operators' reliable-
@@ -33,8 +32,7 @@ object CheckpointRecovery {
     * metadata — a job manifest entry, not data) alongside the round
     * number; a restart feeds it to [[reload]]. */
   def checkpointFileOf(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .flatMap(_.getCheckpointFile)
+    graft.Caches.checkpointRdd(df).flatMap(_.getCheckpointFile)
 
   /** Rebuild the checkpointed state under `path` in (a possibly brand
     * new) `spark`. `schema` must be the schema the state was written

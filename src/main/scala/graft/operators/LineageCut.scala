@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-round lineage cut with BOUNDED storage for the iterative
   * operators (PageRank, Bfs, Sssp, Hits, KCore, LabelPropagation,
@@ -28,7 +27,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * cut reading two generations back.
   *
   * Mechanics: `Dataset.checkpoint`/`localCheckpoint` return a Dataset
-  * whose analyzed plan is a [[LogicalRDD]] over the internal
+  * whose analyzed plan is a `LogicalRDD` over the internal
   * checkpointed RDD — that RDD is what holds the persisted blocks, so
   * it is what gets unpersisted on eviction. In reliable-checkpoint
   * mode (`checkpointDir = Some(dir)`) the data lives in checkpoint
@@ -71,10 +70,9 @@ object LineageCut {
     * way (it holds the full node-sized state, not a delta), so
     * resuming from the latest announced file is always correct. */
   def announceRound(df: DataFrame, tag: String, round: Int): Unit =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .flatMap(_.getCheckpointFile).foreach { f =>
-        System.err.println(s"[$tag] round $round complete: $f")
-      }
+    CheckpointRecovery.checkpointFileOf(df).foreach { f =>
+      System.err.println(s"[$tag] round $round complete: $f")
+    }
 }
 
 final class LineageCut(checkpointDir: Option[String], keep: Int = 2) {
@@ -138,12 +136,11 @@ final class LineageCut(checkpointDir: Option[String], keep: Int = 2) {
     * sweep arm in-pack). */
   def apply(df: DataFrame): DataFrame = {
     val out = cutOnly(df)
-    out.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .foreach { rdd =>
-        graft.Caches.track(rdd)
-        live.enqueue(rdd)
-        while (live.size > keep) release(live.dequeue())
-      }
+    graft.Caches.checkpointRdd(out).foreach { rdd =>
+      graft.Caches.track(rdd)
+      live.enqueue(rdd)
+      while (live.size > keep) release(live.dequeue())
+    }
     out
   }
 
@@ -162,8 +159,7 @@ final class LineageCut(checkpointDir: Option[String], keep: Int = 2) {
     * edge-SIZED and dead once the run's result is consumed. */
   def pin(df: DataFrame): DataFrame = {
     val out = cutOnly(df)
-    out.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .foreach(graft.Caches.track)
+    graft.Caches.checkpointRdd(out).foreach(graft.Caches.track)
     out
   }
 }

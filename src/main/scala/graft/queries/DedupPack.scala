@@ -56,10 +56,8 @@ object DedupPack extends QueryPack {
     * is a few MB per 5k docs; at 100 TB this stage is a materialized
     * intermediate table. The repartition spreads the single-file scan
     * across all cores before the heavy per-row compute. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def shingled(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d),
+    graft.Caches.memo(s, "dedup.shingles:" + d)(
       Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .withColumn("toks", split(col("text"), " "))
@@ -105,11 +103,9 @@ object DedupPack extends QueryPack {
   // is handed out) — but repeated builds over the same (session, dir)
   // (d19's inner d02 call, warmup reps, fingerprintAll) should pay the
   // guard scan ONCE, like the shingle/signature memos they ride on.
-  private val pairMassCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def guardJaccardBudget(s: SparkSession, d: String,
       ex: DataFrame): Unit =
-    requireJaccardBudget(pairMassCache.getOrElseUpdate((s, d),
+    requireJaccardBudget(graft.Caches.memo(s, "dedup.pairmass:" + d)(
       ex.groupBy("g").agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
         .first().getLong(0)))
@@ -122,10 +118,8 @@ object DedupPack extends QueryPack {
         "past the cap run d03 (MinHash+LSH banding) — the approximate " +
         "scale path with measured recall (d15/d17/d19 instruments).")
 
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def signatures(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((s, d), {
+    graft.Caches.memo(s, "dedup.signatures:" + d) {
       graft.functions.GraftFunctions.register(s)
       val sigs = graft.functions.GraftFunctions.minhashSigs(col("s"), numHashes)
       val sigCols = (0 until numHashes).map { i =>
@@ -135,24 +129,7 @@ object DedupPack extends QueryPack {
         .select(col("doc_id"), col("s"), sigs.as("sigs"))
         .select(col("doc_id") +: col("s") +: sigCols: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  /** Unpins the memoized shingle/signature relations for `session`,
-    * unpersisting their blocks. The caches exist so one Verify/Bench run
-    * computes each relation exactly once across d02/d03/d06/d07/p01
-    * plan branches; a LONG-LIVED session serving many dirs should call
-    * this between corpora (or the pinned blocks accumulate — the
-    * round-4 advice leak). Entries are keyed by (session, dir), so
-    * other sessions' caches are untouched. */
-  def clear(session: SparkSession): Unit = {
-    Seq(shingleCache, sigCache).foreach { c =>
-      c.keys.filter(_._1 eq session).foreach { k =>
-        c.remove(k).foreach(_.unpersist(blocking = true))
-      }
     }
-    // the guard's pair-mass memo follows the relations it was computed
-    // from (a pure long — nothing to unpersist)
-    pairMassCache.keys.filter(_._1 eq session).foreach(pairMassCache.remove)
-  }
 
   private val sqlShingle =
     """list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 1),

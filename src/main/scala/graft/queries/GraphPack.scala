@@ -53,15 +53,12 @@ object GraphPack extends QueryPack {
     * re-derivation fixed in [[graft.operators.Hits]] the same round.
     * At 100 TB this is a materialized intermediate edge table that a
     * SUITE of graph analytics reads, which is how a production graph
-    * workload actually runs. Keyed (session, dir) like DedupPack's
-    * shingle cache; [[clear]] unpins it for long-lived sessions
+    * workload actually runs. Memoized like DedupPack's shingle
+    * relation; [[graft.Caches.sweep]] unpins it for long-lived sessions
     * switching corpora. Engines still cut their own pre-partitioned
     * copies internally — the cache removes the relational derivation,
     * not the pins. g08 (edge WEIGHTS need the pre-distinct pair
     * multiset) and g03 (part co-occurrence graph) derive their own. */
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Int-pack (round 15, the r14 verdict's #1 scale item): the
     * derivation's `.distinct()` was THE one stage measured superlinear
     * at sf30 (284.8 s vs 32.9 s at sf10, 8.7× for 3× data, spill-bound
@@ -155,48 +152,16 @@ object GraphPack extends QueryPack {
   }
 
   private def supplierCustomerEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.get((s, d)).getOrElse {
-      // Build-then-putIfAbsent, NOT getOrElseUpdate: TrieMap's
-      // getOrElseUpdate is not atomic over its builder, and the eager
-      // localCheckpoint inside it materializes blocks — two threads
-      // racing here would both checkpoint and the loser's pinned
-      // blocks would leak for the session lifetime (clear only sees
-      // the map entry). With putIfAbsent the loser's checkpoint is
-      // unpersisted before its DataFrame is dropped.
-      //
-      // localCheckpoint, NOT persist: consumers re-scan this relation
-      // many times (engines pin/repartition it, declarative queries
-      // branch it), and an InMemoryRelation pays columnar
-      // compression + row conversion PER SCAN — measured SLOWER than
-      // re-deriving the cheap codegen join at sf0.1 (g01 warm 3.2 →
-      // 5.4 s under a persist() cache). A localCheckpoint stores raw
-      // UnsafeRow blocks — the same storage the engines' own pins
-      // use — and scans at block-read speed.
-      val built = deriveSupplierCustomerEdges(s, d).localCheckpoint(true)
-      edgeCache.putIfAbsent((s, d), built) match {
-        case Some(winner) => unpinCheckpoint(built); winner
-        case None => built
-      }
-    }
-
-  private def unpinCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = true))
-
-  /** Drops the memoized edge relation for `session` — entries are keyed
-    * (session, dir); other sessions' caches are untouched. STRONGER
-    * than DedupPack.clear's unpin: that pack's persist-backed relations
-    * transparently recompute after unpersist, whereas unpersisting a
-    * localCheckpoint'd RDD truncates lineage — any still-held DataFrame
-    * derived from the cached edge relation THROWS on its next action
-    * instead of recomputing. Callers must not hold graph-query
-    * DataFrames across a clear; re-request them (the next call
-    * re-derives and re-pins). */
-  def clear(session: SparkSession): Unit =
-    edgeCache.keys.filter(_._1 eq session).foreach { k =>
-      edgeCache.remove(k).foreach(unpinCheckpoint)
-    }
+    // localCheckpoint, NOT persist: consumers re-scan this relation
+    // many times (engines pin/repartition it, declarative queries
+    // branch it), and an InMemoryRelation pays columnar
+    // compression + row conversion PER SCAN — measured SLOWER than
+    // re-deriving the cheap codegen join at sf0.1 (g01 warm 3.2 →
+    // 5.4 s under a persist() cache). A localCheckpoint stores raw
+    // UnsafeRow blocks — the same storage the engines' own pins
+    // use — and scans at block-read speed.
+    graft.Caches.memo(s, "graph.edges:" + d)(
+      deriveSupplierCustomerEdges(s, d).localCheckpoint(true))
 
   /** g11's community labeling, factored so PlanSpec can pin its
     * broadcast shape DIRECTLY (round 15): the query cuts this

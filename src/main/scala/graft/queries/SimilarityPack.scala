@@ -162,28 +162,12 @@ object SimilarityPack extends QueryPack {
     * before the cache each of them (and each Bench repetition) re-ran
     * the explode + two Lloyd passes AND leaked that call's checkpoint
     * blocks to the ContextCleaner. All three relations are eagerly
-    * checkpointed so consumers read materialized tables; [[clear]]
-    * unpins them for long-lived sessions switching corpora. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
-  /** Unpins the memoized PQ relations for `session` (DedupPack.clear's
-    * contract): entries are keyed (session, dir), other sessions'
-    * caches are untouched. */
-  def clear(session: SparkSession): Unit =
-    pqCache.keys.filter(_._1 eq session).foreach { k =>
-      pqCache.remove(k).foreach { case (q, c1, a2) =>
-        Seq(q, c1, a2).foreach { df =>
-          df.queryExecution.analyzed.collectFirst {
-            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-          }.foreach(_.unpersist(blocking = true))
-        }
-      }
-    }
-
+    * checkpointed so consumers read materialized tables;
+    * [[graft.Caches.sweep]] unpins them for long-lived sessions
+    * switching corpora. */
   private def pqParts(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate((s, d), buildPqParts(s, d))
+    graft.Caches.memo(s, "similarity.pq:" + d)(buildPqParts(s, d))
 
   private def buildPqParts(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
@@ -229,9 +213,7 @@ object SimilarityPack extends QueryPack {
     // a1's blocks are build-only scaffolding — the cached tuple keeps
     // (q, c1, a2); release the intermediate now that c1 materialized
     val a2 = assignTo(c1).localCheckpoint(true)
-    a1.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.Caches.checkpointRdd(a1).foreach(graft.Caches.releaseRdd(_))
     (q, c1, a2)
   }
 

@@ -1,18 +1,19 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.mr.SparkTestSession
-import graft.queries.{DedupPack, GraphPack, SimilarityPack}
 
 /** Pins the session-cache registry (round 10, verdict item 5): the
   * full-suite Verify run sweeps pack memos at query-group boundaries,
-  * and the sweep must actually release EVERY pack's pinned blocks — a
-  * registry that misses one memo recreates exactly the unbounded
-  * accumulation that collapsed the shared-session sf10 run. The per-
-  * pack clears have their own specs (DedupCacheSpec, PqCacheSpec,
-  * GraphCacheSpec); this spec pins the REGISTRY: one sweep, all three
-  * populated memos gone, and consumers still answer afterwards. */
+  * and the sweep must actually release EVERY pack's pinned blocks —
+  * and only its own session's. Every memo goes through `Caches.memo`
+  * (MemoOwnerSpec fails on a session-keyed map anywhere else); the
+  * per-pack reuse checks are DedupCacheSpec, PqCacheSpec and
+  * GraphCacheSpec. This spec pins the REGISTRY: one sweep, all three
+  * populated memos gone, other sessions untouched, and consumers still
+  * answer afterwards. */
 class CachesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
@@ -35,6 +36,78 @@ class CachesSpec extends AnyFunSuite {
     // swept memos rebuild transparently on the next request
     assert(SparkEntry.queries("g12_degree_skew")(spark, sfDir).count() > 0)
     Caches.sweep(spark)
+  }
+
+  test("a sweep leaves other sessions' memos resident and reused") {
+    val other = spark.newSession()
+    Caches.sweep(spark)
+    Caches.sweep(other)
+    Caches.strayUnpersist(spark)
+    val before = persisted
+    def buildMemos(s: SparkSession): Unit = {
+      assert(SparkEntry.queries("d03_minhash_lsh")(s, sfDir).count() > 0)
+      assert(SparkEntry.queries("g12_degree_skew")(s, sfDir).count() > 0)
+    }
+    buildMemos(spark)
+    val afterOwn = persisted
+    buildMemos(other)
+    val afterBoth = persisted
+    // the edge memo is a per-session localCheckpoint; the persisted
+    // shingle/signature relations are one CacheManager entry per plan,
+    // shared by both sessions of this context
+    val otherOnly = afterBoth -- afterOwn
+    assert(otherOnly.nonEmpty, "expected the other session's own edge memo")
+    Caches.sweep(spark)
+    val resident = persisted
+    assert((afterOwn -- resident).nonEmpty,
+      "sweep released nothing of its own session")
+    assert(otherOnly.subsetOf(resident), "sweep released another " +
+      s"session's blocks: ${(otherOnly -- resident).toSeq.sorted}")
+    // the other session's next calls read its memos, without a rebuild
+    val d03 = SparkEntry.queries("d03_minhash_lsh")(other, sfDir)
+    assert(d03.queryExecution.optimizedPlan.exists {
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
+      case _ => false
+    }, "the other session's shingle/signature relations lost their cache")
+    assert(d03.count() > 0)
+    assert(SparkEntry.queries("g12_degree_skew")(other, sfDir).count() > 0)
+    Caches.strayUnpersist(other)
+    assert(persisted === resident, "the other session rebuilt a " +
+      s"memo: ${(persisted -- resident).toSeq.sorted}")
+    Caches.sweep(other)
+    assert((persisted -- before).isEmpty,
+      s"the last sweep left blocks pinned: ${(persisted -- before).toSeq.sorted}")
+  }
+
+  test("memo: a losing build is released, the winner's blocks are kept") {
+    import spark.implicits._
+    Caches.sweep(spark)
+    val before = persisted
+    // both threads miss, build, then meet before either publishes: the
+    // race putIfAbsent settles
+    def race[T <: AnyRef](key: String)(build: => T): T = {
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[T]()
+      val ts = (1 to 2).map(_ => new Thread(() => got.add(
+        Caches.memo(spark, key) { val v = build; gate.await(); v })))
+      ts.foreach(_.start()); ts.foreach(_.join())
+      assert(got.size === 2 && (got.peek() eq got.toArray.last),
+        "both callers must get the winning build")
+      got.peek()
+    }
+    // checkpoint builds are distinct RDDs: the loser's is released
+    val cut = race("test.cut")(Seq(1, 2, 3).toDF("x").localCheckpoint(true))
+    assert(persisted -- before === Caches.checkpointRdd(cut).map(_.id).toSet,
+      "the losing checkpoint build leaked its blocks")
+    // persisted builds share one CacheManager entry: releasing the
+    // loser must not uncache the winner
+    val cached = race("test.persist")(Seq(4, 5).toDF("y").persist())
+    assert(cached.storageLevel.useMemory,
+      "releasing the losing build uncached the winner")
+    assert(cached.count() === 2)
+    Caches.sweep(spark)
+    assert((persisted -- before).isEmpty)
+    assert(!cached.storageLevel.isValid)
   }
 
   test("strayUnpersist reclaims engine leftovers but never pack memos") {

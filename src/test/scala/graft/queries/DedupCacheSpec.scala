@@ -7,30 +7,31 @@ import graft.mr.SparkTestSession
 
 /** Unpersist discipline for DedupPack's memoized shingle/signature
   * relations (round-4 advice): a long-lived session serving many dirs
-  * must be able to release the pinned blocks between corpora.
+  * must be able to release the pinned blocks between corpora — through
+  * the one registry, `Caches.sweep`.
   */
 class DedupCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
 
-  test("DedupPack.clear unpins every block a d03 run persisted") {
+  test("Caches.sweep unpins every block a d03 run persisted") {
     // other suites (e.g. the bench smoke) may have warmed the caches in
     // this shared session — start from a cleared state so the
     // "d03 persists something new" assertion sees its own blocks
-    DedupPack.clear(spark)
+    graft.Caches.sweep(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // d03 builds both cached relations (shingles + signatures)
     assert(SparkEntry.queries("d03_minhash_lsh")(spark, sfDir).count() >= 0)
     val during = spark.sparkContext.getPersistentRDDs.keySet
     assert((during -- before).nonEmpty,
       "expected d03 to persist its shingle/signature relations")
-    DedupPack.clear(spark)
+    graft.Caches.sweep(spark)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
-      s"lingering persisted RDDs after clear: ${after -- before}")
+      s"lingering persisted RDDs after sweep: ${after -- before}")
     // cleared caches rebuild transparently — d03 still answers
     assert(SparkEntry.queries("d03_minhash_lsh")(spark, sfDir).count() >= 0)
-    DedupPack.clear(spark)
+    graft.Caches.sweep(spark)
   }
 
   test("d02/d12: the exact quadratic refuses past its pair-mass budget") {

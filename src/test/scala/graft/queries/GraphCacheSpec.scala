@@ -8,12 +8,12 @@ import graft.mr.SparkTestSession
 /** Pins the memoized supplier↔customer edge relation (round 9): graph
   * queries derive their edge list from ONE persisted relation per
   * (session, dir) — a second consumer must not re-run the
-  * lineitem⋈orders distinct derivation, and `clear` must unpin the
-  * cached blocks (DedupPack.clear's contract, applied to the graph
-  * surface). Engine consumers (g01/g05/g10, …) additionally cut their
-  * own pre-partitioned copies — those pins are LineageCut's business,
-  * not the cache's — so the reuse assertion runs on two DECLARATIVE
-  * consumers (g12, g11) whose only persisted relation is the cache. */
+  * lineitem⋈orders distinct derivation, and `Caches.sweep` must unpin
+  * the cached blocks. Engine consumers (g01/g05/g10, …) additionally
+  * cut their own pre-partitioned copies — those pins are LineageCut's
+  * business, not the cache's — so the reuse assertion runs on two
+  * DECLARATIVE consumers (g12, g11) whose only persisted relation is
+  * the cache. */
 class GraphCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
@@ -21,7 +21,7 @@ class GraphCacheSpec extends AnyFunSuite {
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
   test("second graph consumer reuses the edge relation; clear unpins it") {
-    GraphPack.clear(spark)
+    graft.Caches.sweep(spark)
     val before = persisted
     SparkEntry.queries("g12_degree_skew")(spark, sfDir).collect()
     val afterBuild = persisted
@@ -39,11 +39,11 @@ class GraphCacheSpec extends AnyFunSuite {
     assert((afterReuse -- afterBuild).isEmpty,
       "second consumer re-derived the edge relation instead of reusing " +
         s"the cache: new persisted RDDs ${(afterReuse -- afterBuild).toSeq.sorted}")
-    GraphPack.clear(spark)
+    graft.Caches.sweep(spark)
     assert((persisted -- before).isEmpty,
       "clear left cached edge blocks pinned")
     // cleared caches rebuild transparently — the consumer still answers
     assert(SparkEntry.queries("g12_degree_skew")(spark, sfDir).count() >= 0)
-    GraphPack.clear(spark)
+    graft.Caches.sweep(spark)
   }
 }

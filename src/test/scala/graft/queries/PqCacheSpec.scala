@@ -8,9 +8,8 @@ import graft.mr.SparkTestSession
 /** Pins the memoized PQ pipeline (round 8): five queries
   * (s11/s12/s20/s21/s22) serve off ONE trained index per
   * (session, dir) — a second consumer must not re-train (re-explode,
-  * re-run Lloyd passes, re-checkpoint), and `clear` must unpin the
-  * cached relations for long-lived sessions switching corpora
-  * (DedupPack.clear's contract, applied to the PQ cache). */
+  * re-run Lloyd passes, re-checkpoint), and `Caches.sweep` must unpin
+  * the cached relations for long-lived sessions switching corpora. */
 class PqCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
@@ -18,7 +17,7 @@ class PqCacheSpec extends AnyFunSuite {
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
   test("second PQ consumer reuses the trained index; clear unpins it") {
-    SimilarityPack.clear(spark)
+    graft.Caches.sweep(spark)
     val before = persisted
     SparkEntry.queries("s12_pq_adc_topk")(spark, sfDir).collect()
     val afterBuild = persisted
@@ -30,7 +29,7 @@ class PqCacheSpec extends AnyFunSuite {
     assert((afterReuse -- afterBuild).isEmpty,
       "later consumers re-trained the index instead of reusing the " +
         s"cache: new persisted RDDs ${(afterReuse -- afterBuild).toSeq.sorted}")
-    SimilarityPack.clear(spark)
+    graft.Caches.sweep(spark)
     assert((persisted -- before).isEmpty,
       "clear left cached PQ blocks pinned")
   }
