@@ -1,6 +1,7 @@
 package graft.mr
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -21,7 +22,11 @@ final case class MrJob(
   * increasing ids starting at 0, queue in arrival order, and execute
   * strictly one at a time in that order. A job that fails does not
   * block the queue (the reference manager logs and moves on); its id is
-  * reported in [[failed]] instead of [[completed]].
+  * reported in [[failed]] instead of [[completed]]. A fatal error (per
+  * `NonFatal`: out of memory, `InterruptedException`, `LinkageError`)
+  * is not a job failure: it propagates out of [[runPending]], the job
+  * it interrupted is in none of [[completed]], [[failed]] and
+  * [[pending]], and the jobs behind it stay pending.
   *
   * Spark's DAGScheduler could run jobs concurrently — the serial drain
   * here is deliberate parity with the reference's one-job-at-a-time
@@ -53,18 +58,22 @@ class MapReduceDriver(spark: SparkSession) {
     while (next.isDefined) {
       val (id, job) = next.get
       try {
-        MapReduceJob.runExe(spark, job.inputDir, job.outputDir,
-          job.mapperExe, job.reducerExe, job.numMappers, job.numReducers,
-          job.perFileMapper, job.committerSink)
+        execute(job)
         synchronized { done += id }
         ranNow += id
       } catch {
-        case e: Throwable => synchronized { errs += ((id, e)) }
+        case NonFatal(e) => synchronized { errs += ((id, e)) }
       }
       next = dequeueNext()
     }
     ranNow.toSeq
   }
+
+  /** Runs one job. A test may substitute it to inject a failure. */
+  protected def execute(job: MrJob): Unit =
+    MapReduceJob.runExe(spark, job.inputDir, job.outputDir,
+      job.mapperExe, job.reducerExe, job.numMappers, job.numReducers,
+      job.perFileMapper, job.committerSink)
 
   private def dequeueNext(): Option[(Int, MrJob)] = synchronized {
     if (queue.isEmpty) None else Some(queue.dequeue())

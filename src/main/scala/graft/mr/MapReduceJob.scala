@@ -30,6 +30,9 @@ import org.apache.spark.sql.SparkSession
   *     `repartitionAndSortWithinPartitions`. Canonical order is
   *     code-point order (= `LC_ALL=C sort` on UTF-8; the reference is
   *     locale-dependent and internally inconsistent — SURVEY §7.3.1).
+  *     Identical lines cross the shuffle once per map task with a count
+  *     and are expanded after the sort ([[LineCounts]]); the reducer's
+  *     stream is unchanged.
   *   - O6 reduce: merged sorted stream piped to the reducer, same keys
   *     contiguous (worker/__main__.py:170-185).
   *   - O7 sink: output dir cleared then `part-{i:05d}` files written
@@ -68,6 +71,12 @@ object MapReduceJob {
   /** O3–O5 — md5-partition on the first-TAB field, whole-line sort
     * within each of the `numReducers` partitions.
     *
+    * Each map task folds identical lines into `(line, count)` records
+    * ([[LineCounts]]), so a line crosses the shuffle and the reduce-side
+    * sort once per map task, not once per occurrence; after the sort each
+    * record is expanded back into `count` copies. Each partition's lines
+    * and their order are exactly those of sorting every line on its own.
+    *
     * @param rawNewlineParity hash/sort as if each line kept its trailing
     *                         '\n' (the reference worker's raw behavior,
     *                         worker/__main__.py:137-149) — closes the
@@ -79,10 +88,10 @@ object MapReduceJob {
     implicit val ord: Ordering[String] =
       if (rawNewlineParity) Md5Partitioner.rawNewlineOrdering
       else Md5Partitioner.codePointOrdering
-    mapped.map(l => (l, null: Any))
+    mapped.mapPartitions(LineCounts.fold)
       .repartitionAndSortWithinPartitions(
         new Md5Partitioner(numReducers, rawNewlineParity))
-      .map(_._1)
+      .mapPartitions(LineCounts.expand)
   }
 
   /** O1 variant — one partition per input file (sorted by name), so

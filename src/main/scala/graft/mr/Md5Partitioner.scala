@@ -52,9 +52,11 @@ class Md5Partitioner(override val numPartitions: Int,
       case null      => ""
       case other     => other.toString
     }
+    val tab = line.indexOf('\t')
     val k =
-      if (rawNewlineParity && line.indexOf('\t') < 0) line + "\n"
-      else line.takeWhile(_ != '\t')
+      if (tab >= 0) line.substring(0, tab)
+      else if (rawNewlineParity) line + "\n"
+      else line
     Md5Partitioner.partitionFor(k, numPartitions)
   }
 

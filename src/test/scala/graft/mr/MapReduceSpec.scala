@@ -219,6 +219,74 @@ class MapReduceJobSpec extends AnyFunSuite {
     assert(readPartFiles(out)("part-00000") === expected.toSeq)
   }
 
+  test("executable word count on duplicate-heavy non-ASCII text: part " +
+    "files in LC_ALL=C sort order") {
+    // U+1F600 is a surrogate pair and U+FF21 lies in U+E000–U+FFFF; both
+    // land in part 2 of 3, where UTF-16 code-unit order and byte order
+    // disagree on them
+    val words = Seq("\uD83D\uDE00", "\uFF21", "ü键", "héllo", "日本", "a", "é")
+    val rnd = new scala.util.Random(11)
+    val text = Seq.fill(3, 400)(Seq.fill(1 + rnd.nextInt(6))(
+      words(rnd.nextInt(words.size))).mkString(" "))
+    val in = tmpDir("mr-in-utf8")
+    text.zipWithIndex.foreach { case (ls, f) =>
+      writeFile(in, s"f$f.txt", ls.mkString("", "\n", "\n"))
+    }
+    val exeDir = tmpDir("mr-exe-utf8")
+    val out = tmpDir("mr-out-utf8")
+    val r = 3
+    MapReduceJob.runExe(spark, in.toString, out.toString,
+      writeExe(exeDir, "wc_map.sh", wcMap),
+      writeExe(exeDir, "wc_reduce.sh", wcReduce),
+      numMappers = 2, numReducers = r)
+
+    val counts = text.flatten.flatMap(_.split(" ")).groupBy(identity)
+      .map { case (w, ws) => s"$w\t${ws.size}" }.toSeq
+    def utf8(l: String) = l.getBytes(StandardCharsets.UTF_8)
+    val expected = (0 until r).map { p =>
+      f"part-$p%05d" -> counts
+        .filter(l => Md5Partitioner.partitionFor(l.takeWhile(_ != '\t'), r) == p)
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(utf8(a), utf8(b)) < 0)
+    }.toMap
+    assert(readPartFiles(out) === expected)
+    assert(counts.size === words.size)
+    assert(Seq(words(0), words(1)).map(Md5Partitioner.partitionFor(_, r)) === Seq(2, 2))
+    assert(words(0) < words(1))
+  }
+
+  test("the map stage writes one shuffle record per distinct line per map " +
+    "task; all-distinct lines each cross once") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.graftshim.ListenerShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    def mapRecordsWritten(lines: Seq[String]): (Long, Long) = {
+      val rdd = sc.parallelize(lines, 4)
+      val distinctPerTask = rdd.glom().map(_.distinct.length.toLong).sum().toLong
+      val written = new AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ShuffleMapTask" && e.taskMetrics != null)
+            written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      }
+      ListenerShim.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(MapReduceJob.shuffleSort(rdd, 3).count() === lines.size)
+        ListenerShim.waitUntilEmpty(sc)
+      } finally sc.removeSparkListener(listener)
+      (written.get, distinctPerTask)
+    }
+    // word-count shaped: 40k lines over 50 keys
+    val heavy = Seq.tabulate(40000)(i => s"w${(i * 7919) % 50}\t1")
+    val (heavyWritten, heavyDistinct) = mapRecordsWritten(heavy)
+    assert(heavyWritten > 0 && heavyWritten <= heavyDistinct,
+      s"$heavyWritten records for $heavyDistinct distinct lines per task")
+    // all distinct, past the probe in every task
+    val distinct = Seq.tabulate(8 * LineCounts.ProbeLines)(i => s"d$i\t$i")
+    assert(mapRecordsWritten(distinct)._1 === distinct.size)
+  }
+
   test("empty input dir yields empty part files, not a crash") {
     // the reference crashes on empty map tasks (worker/__main__.py:122-151
     // runs `sort` on never-created files); we must not (SURVEY §2.1).
@@ -528,6 +596,21 @@ class MapReduceDriverSpec extends AnyFunSuite {
       tmpDir("drv-out2").resolve("o").toString, cat, cat))
     assert(id2 === 2)
     assert(driver.runPending() === Seq(2))
+  }
+
+  test("a fatal error propagates out of runPending; later jobs stay pending") {
+    for (fatal <- Seq(new OutOfMemoryError("injected"),
+        new InterruptedException("injected"), new LinkageError("injected"))) {
+      val driver = new MapReduceDriver(spark) {
+        override protected def execute(job: MrJob): Unit = throw fatal
+      }
+      driver.submit(MrJob("in", "out0", "m", "r"))
+      val second = driver.submit(MrJob("in", "out1", "m", "r"))
+      val e = intercept[Throwable](driver.runPending())
+      assert(e eq fatal)
+      assert(driver.failed.isEmpty && driver.completed.isEmpty)
+      assert(driver.pending === Seq(second))
+    }
   }
 
   test("a failing job reports failed and does not block later jobs") {
