@@ -125,8 +125,9 @@ object Bench {
     // STREAM-ONLY mode (round 13, measurement aid): skip the query
     // passes entirely and print one line per stream replay — the
     // cheap arm for interleaved two-tree stream A/Bs
-    // (tools/ab_scratch.sh can't reach the stream harness through
-    // graft.Scratch, and a full Bench run costs ~10 min per arm).
+    // (tools/ab_tree3.py times queries through graft.Verify and can't
+    // reach the stream harness, and a full Bench run costs ~10 min per
+    // arm).
     // Probes bracket the replays so the readings self-adjudicate.
     if (sys.env.get("SPARK_GRAFT_STREAM_ONLY").contains("1")) {
       val p0 = Calibration.probe(spark)

@@ -14,8 +14,7 @@ final case class MrJob(
     reducerExe: String,
     numMappers: Int = 2,
     numReducers: Int = 2,
-    perFileMapper: Boolean = false,
-    committerSink: Boolean = false)
+    perFileMapper: Boolean = false)
 
 /** O11 parity — the reference manager's FIFO job queue (reference
   * manager/__main__.py:237-262): submitted jobs get monotonically
@@ -73,7 +72,7 @@ class MapReduceDriver(spark: SparkSession) {
   protected def execute(job: MrJob): Unit =
     MapReduceJob.runExe(spark, job.inputDir, job.outputDir,
       job.mapperExe, job.reducerExe, job.numMappers, job.numReducers,
-      job.perFileMapper, job.committerSink)
+      job.perFileMapper)
 
   private def dequeueNext(): Option[(Int, MrJob)] = synchronized {
     if (queue.isEmpty) None else Some(queue.dequeue())

@@ -1,12 +1,15 @@
 package graft.mr
 
-import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+
+import graft.sources.{LineDir, LocalLines, StagedParts}
 
 /** The reference engine's entire user surface, on Spark primitives: a
   * two-stage MapReduce job with the Hadoop-streaming contract
@@ -14,12 +17,15 @@ import org.apache.spark.sql.SparkSession
   * reducer_exe, num_mappers, num_reducers)`).
   *
   * Stage semantics reproduced exactly (SURVEY.md §2.1):
-  *   - O1 source: input dir enumerated sorted-by-name, files dealt
-  *     round-robin into `numMappers` groups (manager/__main__.py:364-390),
-  *     one task per group — exactly the reference's map-task
-  *     composition. Input files are plain UTF-8 text on a local or
-  *     shared filesystem, read by [[LocalLines]] (no compression codecs,
-  *     no Hadoop filesystems — neither is in the reference's contract).
+  *   - O1 source: input dir enumerated sorted-by-name
+  *     ([[graft.sources.LineDir.listSorted]], the linedir connector's
+  *     lister), files dealt round-robin into `numMappers` groups
+  *     (manager/__main__.py:364-390), one task per group — exactly the
+  *     reference's map-task composition. Input files are plain UTF-8
+  *     text on a local or shared filesystem, read by
+  *     [[graft.sources.LocalLines]], the connector's reader too (no
+  *     compression codecs, no Hadoop filesystems — neither is in the
+  *     reference's contract).
   *   - O2 map: executable gets lines on stdin, emits 0..n lines per
   *     input line (worker/__main__.py:113-158) → `RDD.pipe`, or a typed
   *     per-line closure.
@@ -35,7 +41,8 @@ import org.apache.spark.sql.SparkSession
   *     stream is unchanged.
   *   - O6 reduce: merged sorted stream piped to the reducer, same keys
   *     contiguous (worker/__main__.py:170-185).
-  *   - O7 sink: output dir cleared then `part-{i:05d}` files written
+  *   - O7 sink: output dir cleared then `part-{i:05d}` files committed
+  *     through [[graft.sources.StagedParts]], the connector's sink too
   *     (manager/__main__.py:358-361; worker/__main__.py:172,183-185).
   *   - O8 barrier: the Spark shuffle stage boundary (free).
   *
@@ -62,7 +69,7 @@ object MapReduceJob {
     * reference's task composition. */
   def inputRdd(spark: SparkSession, inputDir: String, numMappers: Int): RDD[String] = {
     requireMappers(numMappers)
-    val files = listSorted(Paths.get(inputDir)).map(_.toString).toVector
+    val files = listPaths(inputDir).toVector
     readGroups(spark, (0 until math.min(numMappers, files.size)).map { g =>
       (g until files.size by numMappers).map(files)
     })
@@ -103,7 +110,10 @@ object MapReduceJob {
     * mapper carries per-file state (e.g. `awk END{...}` counters). Same
     * reader and input contract as [[inputRdd]]. */
   def inputRddPerFile(spark: SparkSession, inputDir: String): RDD[String] =
-    readGroups(spark, listSorted(Paths.get(inputDir)).map(f => Seq(f.toString)))
+    readGroups(spark, listPaths(inputDir).map(Seq(_)))
+
+  private def listPaths(inputDir: String): Seq[String] =
+    LineDir.listSorted(inputDir).map(Paths.get(inputDir, _).toString)
 
   /** One partition per group; partition i streams group i's files in
     * order through [[LocalLines]]. */
@@ -121,28 +131,18 @@ object MapReduceJob {
     *                      ([[inputRddPerFile]]) instead of once per
     *                      partition — exact reference granularity for
     *                      stateful mappers
-    * @param committerSink commit output through Hadoop's
-    *                      FileOutputCommitter ([[writePartFilesCommitter]])
-    *                      instead of the local/shared-FS move sink
-    * @param rawNewlineParity hash/sort with the trailing newline
-    *                      attached (see [[shuffleSort]]) — exact
-    *                      byte parity for tab-less mapper output
     */
   def runExe(spark: SparkSession, inputDir: String, outputDir: String,
       mapperExe: String, reducerExe: String,
       numMappers: Int = 2, numReducers: Int = 2,
-      perFileMapper: Boolean = false,
-      committerSink: Boolean = false,
-      rawNewlineParity: Boolean = false): Unit = {
+      perFileMapper: Boolean = false): Unit = {
     requireMappers(numMappers)
     val input =
       if (perFileMapper) inputRddPerFile(spark, inputDir)
       else inputRdd(spark, inputDir, numMappers)
     val mapped = pipeUtf8(input, mapperExe)
-    val reduced =
-      pipeUtf8(shuffleSort(mapped, numReducers, rawNewlineParity), reducerExe)
-    if (committerSink) writePartFilesCommitter(reduced, outputDir)
-    else writePartFiles(reduced, outputDir)
+    writePartFiles(pipeUtf8(shuffleSort(mapped, numReducers), reducerExe),
+      outputDir)
   }
 
   /** `rdd.pipe(exe)` with UTF-8 on both ends of the pipe. Spark's
@@ -191,65 +191,27 @@ object MapReduceJob {
     shuffleSort(combined, numReducers).mapPartitions(reducer)
   }
 
-  /** O7 — clear the output dir, then write partition i as
-    * `part-{i:05d}` (reference naming). Local/shared-FS sink mirroring
-    * the reference's move-into-place commit; at cluster scale the same
-    * RDD goes to `saveAsTextFile` instead. */
+  /** O7 — clear the output dir (the reference's pre-clear), then
+    * commit partition i as `part-{i:05d}` (reference naming) through
+    * [[graft.sources.StagedParts]]: each task attempt stages its file
+    * under the output dir and the driver moves the reported attempts
+    * into place. A failed job leaves the cleared dir empty. */
   def writePartFiles(reduced: RDD[String], outputDir: String): Unit = {
     val out = Paths.get(outputDir)
     deleteRecursively(out)
     Files.createDirectories(out)
-    val n = reduced.getNumPartitions
-    reduced.mapPartitionsWithIndex { (i, it) =>
-      val tmp = Files.createTempFile(s"graft-part$i-", ".tmp")
-      val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-      try it.foreach { l => w.write(l); w.write('\n') }
-      finally w.close()
-      Iterator.single((i, tmp.toString))
-    }.collect().foreach { case (i, tmp) =>
-      Files.move(Paths.get(tmp), out.resolve(f"part-$i%05d"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    // empty partitions still produce their (empty) part file, and every
-    // part index exists even if the job produced < numReducers partitions
-    (0 until n).foreach { i =>
-      val p = out.resolve(f"part-$i%05d")
-      if (!Files.exists(p)) Files.createFile(p)
-    }
+    val staged = StagedParts.begin(outputDir)
+    try {
+      val moves = reduced.mapPartitionsWithIndex { (i, it) =>
+        val name = StagedParts.attemptName(0L, i, TaskContext.get().taskAttemptId())
+        val w = staged.open(name)
+        try it.foreach { l => w.write(l); w.write('\n') }
+        finally w.close()
+        Iterator.single(name -> f"part-$i%05d")
+      }.collect()
+      staged.commit(moves.toSeq, replace = false)
+    } catch { case NonFatal(e) => staged.sweep(); throw e }
   }
-
-  /** O7, cluster-safe mode — write through Hadoop's FileOutputCommitter
-    * (`saveAsTextFile`): each task writes under `_temporary/<attempt>/`
-    * and the committer renames into place on task commit, which is
-    * correct on ANY Hadoop filesystem with speculative/retried tasks.
-    * The local-move sink above mirrors the reference's driver-side
-    * move-into-place (manager/__main__.py:358-361; worker/__main__.py:
-    * 183-185) and is only valid when driver and executors share a
-    * filesystem — fine on local[n], wrong on a real cluster.
-    *
-    * Hadoop's TextOutputFormat already names outputs `part-%05d`, the
-    * reference's exact naming; the `_SUCCESS` marker is removed so the
-    * output dir layout matches the reference's (part files only). */
-  def writePartFilesCommitter(reduced: RDD[String], outputDir: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(outputDir)
-    val fs = hPath.getFileSystem(reduced.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true) // O7 overwrite semantics
-    fs.setWriteChecksum(false) // no .crc sidecars in the output layout
-    reduced.saveAsTextFile(outputDir)
-    fs.delete(new org.apache.hadoop.fs.Path(hPath, "_SUCCESS"), false)
-  }
-
-  private def listSorted(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else Files.list(dir).iterator().asScala.toSeq
-      .filter(Files.isRegularFile(_))
-      // skip Hadoop-convention metadata (_SUCCESS, .crc sidecars) so a
-      // Spark-written text dir is a valid job input
-      .filterNot { p =>
-        val n = p.getFileName.toString
-        n.startsWith(".") || n.startsWith("_")
-      }
-      .sortBy(_.getFileName.toString)
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -86,11 +86,10 @@ object MrPack extends QueryPack {
           "#!/bin/sh\nawk -F'\\t' '{ if ($1 != prev) { if (NR > 1) print prev \"\\t\" sum;\n" +
             "  prev = $1; sum = 0 } sum += $2 } END { if (NR > 0) print prev \"\\t\" sum }'\n")
         val outDir = s"$work/out"
-        // committer sink: the oracle gate exercises the cluster-safe
-        // FileOutputCommitter path, not just the local-move fast path
-        // (byte-equality of the two is additionally spec-pinned)
+        // the oracle gate drives the only sink: the staged part-file
+        // commit (graft.sources.StagedParts)
         MapReduceJob.runExe(s, inDir, outDir, mapExe, redExe,
-          numMappers = 3, numReducers = 4, committerSink = true)
+          numMappers = 3, numReducers = 4)
         import s.implicits._
         s.read.textFile(outDir)
           .map { l =>
@@ -252,9 +251,8 @@ object MrPack extends QueryPack {
     // (perFileMapper=true; worker/__main__.py:126-133). The default
     // once-per-partition piping would fold multiple files into one awk
     // run and emit too few lines — this query makes the oracle gate,
-    // not just a spec, sensitive to that divergence. Output also goes
-    // through the cluster-safe FileOutputCommitter sink, so BOTH
-    // production flags are what the driver hash-checks. Input: one
+    // not just a spec, sensitive to that divergence, and it drives the
+    // only sink, the staged part-file commit. Input: one
     // text file per document language (written deterministically from
     // the documents table), so the multiset of per-file line counts
     // equals the language histogram — distinct values at every SF.
@@ -291,7 +289,7 @@ object MrPack extends QueryPack {
         // would pipe several files through ONE awk and lose rows
         MapReduceJob.runExe(s, inDir, outDir, mapExe, redExe,
           numMappers = 2, numReducers = 2,
-          perFileMapper = true, committerSink = true)
+          perFileMapper = true)
         import s.implicits._
         s.read.textFile(outDir)
           .map(l => l.substring(l.indexOf('\t') + 1).toLong)

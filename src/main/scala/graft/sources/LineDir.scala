@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.io.BufferedReader
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
@@ -28,7 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * READ: `spark.read.format("linedir").load(dir)` yields
   * `(value STRING, file STRING, line BIGINT)` — the record, its source
   * file's name, and its 1-based line number (provenance columns the
-  * reference loses the moment lines leave the mapper).
+  * reference loses the moment lines leave the mapper). The data files
+  * are those [[LineDir.listSortedWithAttrs]] lists, and `value` is what
+  * `sc.textFile` returns for the line ([[LocalLines]], the MapReduce
+  * job's reader too).
   * `spark.readStream.format("linedir").load(dir)` is the same table as
   * an incremental source: file-arrival offsets (LineDirMicroBatchStream)
   * turn the reference's static input dir into a replayable stream with
@@ -48,21 +49,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * WRITE: `df.write.format("linedir").mode("overwrite").save(dir)` for
   * a single string column is the reference's O7 sink as a native
-  * connector, with its exact commit protocol made cluster-safe: each
-  * task streams lines to a hidden staging dir (`.staging-<uuid>/`) and
-  * the COMMIT is a driver-side move-into-place to `part-%05d` (named by
-  * partition id, zero-padded like reference worker/__main__.py:183-185)
-  * only after every task reported success — so failed/speculative task
-  * attempts never leave partial part files, the same reason the
-  * reference moves finished files from the worker tmp dir
-  * (manager/__main__.py:358-361). Overwrite clears prior contents at
-  * commit time (the reference pre-clears the output dir).
+  * connector: partition i commits to `part-%05d` (zero-padded like
+  * reference worker/__main__.py:183-185) through [[StagedParts]], the
+  * MapReduce job's sink too. Overwrite clears prior contents at commit
+  * time (the reference pre-clears the output dir).
   *
   * Scale posture: file listing happens once on the driver, is
   * sequential, and REFUSES above `.option("maxListedFiles", n)`
   * (default 100000) — see [[LineDir.DefaultMaxListedFiles]];
-  * readers stream lines off a BufferedReader — no whole-file buffering;
-  * writer staging/commit is rename-only on a shared FS (object stores
+  * readers stream lines through a fixed buffer — no whole-file
+  * buffering; the commit is rename-only on a shared FS (object stores
   * would swap the rename for a copy-manifest commit, same protocol
   * shape).
   */
@@ -121,35 +117,37 @@ object LineDir {
     listed
   }
 
-  /** Sorted file list — the reference's deterministic enumeration. */
-  def listSorted(dir: String): Seq[String] =
-    listDir(Paths.get(dir)) { it =>
-      it.filter(Files.isRegularFile(_))
-        .map(_.getFileName.toString).toSeq
-    }.sorted
-
-  /** Sorted (name, size, mtimeMs) in ONE stat per entry:
-    * `readAttributes` yields the regular-file flag, size, and mtime
-    * together, where the name-only listing plus separate
-    * `getLastModifiedTime`/`Files.size` calls cost 3-4 stats per file
-    * per trigger — the driver-side listing is sequential, so stats per
-    * file is the scaling term for large directories (see SCALE.md for
-    * the files-per-dir posture). A file deleted between the list and
-    * the stat is skipped for this pass (FileStreamSource tolerates the
-    * same race) instead of failing the whole job/stream. */
+  /** The one directory lister of the line-dir data model (batch scan,
+    * stream source, MapReduce job input): the data files of `dir` as
+    * (name, size, mtimeMs), sorted by name — the reference's
+    * deterministic enumeration. Data files are the regular files whose
+    * names start with neither `.` nor `_`: Hadoop-convention metadata
+    * (`_SUCCESS`, `.crc` sidecars) and a writer's hidden staging or
+    * temp files are never data, so a Spark-written text dir reads as
+    * exactly its lines and a half-written dot-file is never admitted.
+    *
+    * ONE stat per entry: `readAttributes` yields the regular-file flag,
+    * size and mtime together — the driver-side listing is sequential,
+    * so stats per file is the scaling term for large directories (see
+    * SCALE.md for the files-per-dir posture). A file deleted between
+    * the list and the stat is skipped for this pass (FileStreamSource
+    * tolerates the same race) instead of failing the whole job/stream. */
   def listSortedWithAttrs(dir: String): Seq[(String, Long, Long)] =
     listDir(Paths.get(dir)) { it =>
       it.flatMap { p =>
-        try {
+        val n = p.getFileName.toString
+        if (n.startsWith(".") || n.startsWith("_")) None
+        else try {
           val a = Files.readAttributes(p,
             classOf[java.nio.file.attribute.BasicFileAttributes])
-          if (a.isRegularFile)
-            Some((p.getFileName.toString, a.size(),
-              a.lastModifiedTime().toMillis))
+          if (a.isRegularFile) Some((n, a.size(), a.lastModifiedTime().toMillis))
           else None
         } catch { case _: java.io.IOException => None }
       }.toSeq
     }.sortBy(_._1)
+
+  /** The names of [[listSortedWithAttrs]]. */
+  def listSorted(dir: String): Seq[String] = listSortedWithAttrs(dir).map(_._1)
 }
 
 private[sources] class LineDirTable(path: String, tableSchema: StructType)
@@ -564,34 +562,23 @@ private[sources] class LineDirReaderFactory(fields: Array[String])
   }
 }
 
-/** Streams the partition's files in order, one open handle at a time. */
+/** The partition's lines ([[LocalLines]] over its files, in order) with
+  * their provenance: the file's name and the 1-based line number. */
 private[sources] class LineDirReader(dir: String, files: Seq[String],
     fields: Array[String]) extends PartitionReader[InternalRow] {
-  private val remaining = scala.collection.mutable.Queue(files: _*)
-  private var reader: BufferedReader = _
+  private val names = files.toIndexedSeq
+  private val lines = new LocalLines(names.map(f => Paths.get(dir, f).toString))
+  private var fileIndex = -1
   private var fileUtf8: UTF8String = _
   private var lineNo = 0L
   private var current: String = _
 
-  private def advanceFile(): Boolean = {
-    if (reader != null) reader.close()
-    if (remaining.isEmpty) { reader = null; false }
-    else {
-      val f = remaining.dequeue()
-      reader = Files.newBufferedReader(Paths.get(dir, f),
-        StandardCharsets.UTF_8)
-      fileUtf8 = UTF8String.fromString(f)
+  override def next(): Boolean = lines.hasNext && {
+    current = lines.next()
+    if (lines.fileIndex != fileIndex) {
+      fileIndex = lines.fileIndex
+      fileUtf8 = UTF8String.fromString(names(fileIndex))
       lineNo = 0L
-      true
-    }
-  }
-
-  override def next(): Boolean = {
-    if (reader == null && !advanceFile()) return false
-    current = reader.readLine()
-    while (current == null) {
-      if (!advanceFile()) return false
-      current = reader.readLine()
     }
     lineNo += 1
     true
@@ -604,7 +591,7 @@ private[sources] class LineDirReader(dir: String, files: Seq[String],
       case "line"  => lineNo
     })
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = lines.close()
 }
 
 // ── write path ────────────────────────────────────────────────────────
@@ -628,55 +615,26 @@ private[sources] class LineDirWriteBuilder(path: String)
   * at-least-once window) rewrites exactly the same names, so the sink
   * is idempotent per epoch, the same contract
   * graft.streaming.StreamingOps.commitBatch provides via foreachBatch
-  * partition-dir overwrites, here native to the connector. Task
-  * staging + driver move-into-place mirror the batch path. */
+  * partition-dir overwrites, here native to the connector. Commit and
+  * abort sweep only the epoch's own staged attempts, and the staging
+  * dir once empty. */
 private[sources] class LineDirStreamingWrite(path: String)
     extends StreamingWrite {
-  private val stagingName = s".staging-${UUID.randomUUID()}"
+  private val staged = StagedParts.begin(path)
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    Files.createDirectories(Paths.get(path, stagingName))
-    val dir = path; val staging = stagingName
-    new StreamingDataWriterFactory {
-      override def createWriter(partitionId: Int, taskId: Long,
-          epochId: Long): DataWriter[InternalRow] =
-        new LineDirWriter(dir, staging, partitionId, taskId,
-          Some(epochId))
-    }
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new LineDirWriterFactory(staged)
 
   override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val out = Paths.get(path)
-    messages.foreach { case LineDirCommit(staged, pid) =>
-      Files.move(Paths.get(path, stagingName, staged),
-        out.resolve(f"part-$epochId%05d-$pid%05d"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    // success-path hygiene: attempts killed without abort() (speculation,
-    // executor loss) leave staged files that no commit message names —
-    // drop this epoch's leftovers, and remove the staging dir once empty
-    // (writers re-create it, and the final epoch leaves the dir clean)
-    val st = Paths.get(path, stagingName)
-    if (Files.exists(st)) {
-      val epochPrefix = f"part-$epochId%05d-"
-      LineDir.listDir(st) { it =>
-        it.filter(_.getFileName.toString.startsWith(epochPrefix))
-          .foreach(Files.delete)
-      }
-      if (LineDir.listDir(st)(!_.hasNext)) Files.delete(st)
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    staged.commit(messages.toSeq.map { case LineDirCommit(name, pid) =>
+      name -> f"part-$epochId%05d-$pid%05d"
+    }, replace = true, prefix = StagedParts.epochPrefix(epochId))
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val st = Paths.get(path, stagingName)
-    if (Files.exists(st)) {
-      LineDir.listDir(st)(_.foreach(Files.delete))
-      Files.delete(st)
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    staged.sweep(StagedParts.epochPrefix(epochId))
 }
 
 private[sources] case class LineDirCommit(stagedName: String,
@@ -684,22 +642,18 @@ private[sources] case class LineDirCommit(stagedName: String,
 
 private[sources] class LineDirBatchWrite(path: String, truncate: Boolean)
     extends BatchWrite {
-  private val stagingName = s".staging-${UUID.randomUUID()}"
+  private val staged = StagedParts.begin(path)
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(Paths.get(path, stagingName))
-    new LineDirWriterFactory(path, stagingName)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new LineDirWriterFactory(staged)
 
-  /** Driver-side move-into-place: only reached when EVERY task
-    * committed, so no partial outputs ever become visible — the
-    * reference's finished-file move (worker tmp → output dir) with
-    * Spark's all-or-nothing job commit on top. */
+  /** Only reached when EVERY task committed, so no partial outputs ever
+    * become visible — Spark's all-or-nothing job commit on top of the
+    * staged move. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val out = Paths.get(path)
     if (truncate)
-      LineDir.listDir(out) { it =>
+      LineDir.listDir(Paths.get(path)) { it =>
         it.filter(p => Files.isRegularFile(p)
             && !p.getFileName.toString.startsWith("."))
           .foreach(Files.delete)
@@ -707,59 +661,42 @@ private[sources] class LineDirBatchWrite(path: String, truncate: Boolean)
     // append numbers past the existing part files so SEQUENTIAL jobs
     // never collide (the reference always starts at 0 because its
     // output dir is always pre-cleared — truncate reproduces that).
-    // Two CONCURRENT append jobs can compute the same base: the append
-    // move below deliberately omits REPLACE_EXISTING so the second
-    // committer fails loudly with FileAlreadyExistsException instead of
-    // silently clobbering the first job's parts.
+    // Two CONCURRENT append jobs can compute the same base: an append
+    // never replaces, so the second committer fails loudly with
+    // FileAlreadyExistsException instead of clobbering the first's parts.
     val base =
       if (truncate) 0
       else LineDir.listSorted(path)
         .flatMap(n => if (n.startsWith("part-")) n.drop(5).toIntOption
                       else None)
         .maxOption.map(_ + 1).getOrElse(0)
-    messages.foreach { case LineDirCommit(staged, pid) =>
-      val target = out.resolve(f"part-${base + pid}%05d")
-      if (truncate)
-        Files.move(Paths.get(path, stagingName, staged), target,
-          StandardCopyOption.REPLACE_EXISTING)
-      else
-        Files.move(Paths.get(path, stagingName, staged), target)
-    }
-    deleteStaging()
+    staged.commit(messages.toSeq.map { case LineDirCommit(name, pid) =>
+      name -> f"part-${base + pid}%05d"
+    }, replace = truncate)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteStaging()
-
-  private def deleteStaging(): Unit = {
-    val st = Paths.get(path, stagingName)
-    if (Files.exists(st)) {
-      LineDir.listDir(st)(_.foreach(Files.delete))
-      Files.delete(st)
-    }
-  }
+    staged.sweep()
 }
 
-private[sources] class LineDirWriterFactory(path: String, staging: String)
-    extends DataWriterFactory {
+/** Batch writers stage under epoch 0. */
+private[sources] class LineDirWriterFactory(staged: StagedParts)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new LineDirWriter(path, staging, partitionId, taskId)
+    createWriter(partitionId, taskId, 0L)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    new LineDirWriter(staged,
+      StagedParts.attemptName(epochId, partitionId, taskId), partitionId)
 }
 
-/** Streams lines to a per-task-attempt staged file; task commit hands
-  * the driver its name. Distinct attempts (retry/speculation) stage
-  * distinct files — only the attempt whose commit message the driver
-  * receives gets moved into place. */
-private[sources] class LineDirWriter(path: String, staging: String,
-    partitionId: Int, taskId: Long, epochId: Option[Long] = None)
-    extends DataWriter[InternalRow] {
-  private val stagedName =
-    f"part-${epochId.getOrElse(0L)}%05d-$partitionId%05d-attempt-$taskId"
-  // idempotent re-create: an aborted epoch removes the staging dir
-  Files.createDirectories(Paths.get(path, staging))
-  private val w = Files.newBufferedWriter(
-    Paths.get(path, staging, stagedName), StandardCharsets.UTF_8)
+/** Streams lines to one task attempt's staged file; task commit hands
+  * the driver its name. */
+private[sources] class LineDirWriter(staged: StagedParts, name: String,
+    partitionId: Int) extends DataWriter[InternalRow] {
+  private val w = staged.open(name)
 
   override def write(row: InternalRow): Unit = {
     w.write(row.getUTF8String(0).toString)
@@ -768,12 +705,12 @@ private[sources] class LineDirWriter(path: String, staging: String,
 
   override def commit(): WriterCommitMessage = {
     w.close()
-    LineDirCommit(stagedName, partitionId)
+    LineDirCommit(name, partitionId)
   }
 
   override def abort(): Unit = {
     w.close()
-    Files.deleteIfExists(Paths.get(path, staging, stagedName))
+    staged.discard(name)
   }
 
   override def close(): Unit = w.close()

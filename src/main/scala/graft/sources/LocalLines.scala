@@ -1,4 +1,4 @@
-package graft.mr
+package graft.sources
 
 import java.io.{FileInputStream, InputStream}
 import java.nio.charset.StandardCharsets
@@ -6,8 +6,11 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.TaskContext
 
 /** Streams the lines of local (or shared-filesystem) text files, the
-  * files read one after another in the given order — the O1 reader of
-  * [[MapReduceJob.inputRdd]] and [[MapReduceJob.inputRddPerFile]].
+  * files read one after another in the given order — the one line
+  * reader of the line-dir data model: the MapReduce job's O1 source
+  * ([[graft.mr.MapReduceJob.inputRdd]]) and the linedir connector's
+  * [[LineDirReader]] both read through it. [[fileIndex]] names the file
+  * the last line came from.
   *
   * Its output equals Hadoop `LineRecordReader`'s over whole files
   * (what `sc.textFile` returns), spec-pinned against it:
@@ -27,7 +30,7 @@ import org.apache.spark.TaskContext
   * when iterated inside a Spark task) closes it if the consumer stops
   * early.
   */
-private[mr] final class LocalLines(files: Seq[String])
+private[graft] final class LocalLines(files: Seq[String])
     extends Iterator[String] with AutoCloseable {
 
   private val pending = files.iterator
@@ -39,6 +42,8 @@ private[mr] final class LocalLines(files: Seq[String])
   private var line = new Array[Byte](256)
   private var len = 0
   private var nextLine: String = _
+  private var opened = 0
+  private var lineFile = -1
 
   Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
 
@@ -46,6 +51,7 @@ private[mr] final class LocalLines(files: Seq[String])
     while (nextLine == null && (in != null || pending.hasNext)) {
       if (in == null) {
         in = new FileInputStream(pending.next())
+        opened += 1
         atFileStart = true
         pos = 0; lim = 0
       }
@@ -59,8 +65,12 @@ private[mr] final class LocalLines(files: Seq[String])
     if (!hasNext) throw new NoSuchElementException("no more lines")
     val l = nextLine
     nextLine = null
+    lineFile = opened - 1 // hasNext stops at the open file's line
     l
   }
+
+  /** Index into `files` of the file the last [[next]] line came from. */
+  def fileIndex: Int = lineFile
 
   override def close(): Unit =
     if (in != null) { in.close(); in = null }
@@ -110,6 +120,6 @@ private[mr] final class LocalLines(files: Seq[String])
   }
 }
 
-private[mr] object LocalLines {
+private[graft] object LocalLines {
   val BufferBytes: Int = 64 * 1024
 }

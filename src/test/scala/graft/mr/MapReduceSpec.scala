@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.LocalLines
+
 object SparkTestSession {
   // A `def` guarded on isStopped, not a `lazy val`: the checkpoint-
   // recovery spec (CheckpointRecoverySpec) deliberately STOPS the
@@ -320,6 +322,9 @@ class MapReduceJobSpec extends AnyFunSuite {
     assert(parts("héllo\t2") === 5)
   }
 
+  def entryNames(dir: Path): Set[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
+
   test("output dir is overwritten (pre-clear semantics)") {
     val out = tmpDir("mr-ovw")
     writeFile(out, "stale-file", "leftover\n")
@@ -327,29 +332,43 @@ class MapReduceJobSpec extends AnyFunSuite {
     MapReduceJob.writePartFiles(MapReduceJob.shuffleSort(rdd, 2), out.toString)
     val parts = readPartFiles(out)
     assert(parts.keySet === Set("part-00000", "part-00001"))
-  }
 
-  test("committer sink: identical output to the local sink, reference layout") {
-    val in = tmpDir("mr-cmt-in")
+    // a full job over a stale dir: only part-* names remain, with no
+    // staging, _SUCCESS or .crc residue
+    val in = tmpDir("mr-ovw-in")
     writeFile(in, "f1.txt", "the quick brown fox\nthe lazy dog\n")
     writeFile(in, "f2.txt", "the dog barks\n")
-    val exeDir = tmpDir("mr-cmt-exe")
-    val mapExe = writeExe(exeDir, "wc_map.sh", wcMap)
-    val redExe = writeExe(exeDir, "wc_reduce.sh", wcReduce)
-
-    val outLocal = tmpDir("mr-cmt-local")
-    val outCommit = tmpDir("mr-cmt-fs")
-    writeFile(outCommit, "stale-file", "leftover\n") // overwrite semantics too
-    MapReduceJob.runExe(spark, in.toString, outLocal.toString, mapExe, redExe,
+    val exeDir = tmpDir("mr-ovw-exe")
+    val jobOut = tmpDir("mr-ovw-job")
+    writeFile(jobOut, "stale-file", "leftover\n")
+    MapReduceJob.runExe(spark, in.toString, jobOut.toString,
+      writeExe(exeDir, "wc_map.sh", wcMap),
+      writeExe(exeDir, "wc_reduce.sh", wcReduce),
       numMappers = 2, numReducers = 3)
-    MapReduceJob.runExe(spark, in.toString, outCommit.toString, mapExe, redExe,
-      numMappers = 2, numReducers = 3, committerSink = true)
+    assert(entryNames(jobOut) === Set("part-00000", "part-00001", "part-00002"))
+    assert(readPartFiles(jobOut).values.flatten.toSet === Set("the\t3",
+      "quick\t1", "brown\t1", "fox\t1", "lazy\t1", "dog\t2", "barks\t1"))
+  }
 
-    // byte-identical part files, no _SUCCESS/_temporary/crc residue
-    assert(readPartFiles(outCommit) === readPartFiles(outLocal))
-    val names = Files.list(outCommit).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    assert(names === Set("part-00000", "part-00001", "part-00002"))
+  test("a failed job leaves an empty output dir: no staged file, no temp file") {
+    val in = tmpDir("mr-fail-in")
+    writeFile(in, "f1.txt", "a\tb\nc\td\n")
+    writeFile(in, "f2.txt", "e\tf\n")
+    val exeDir = tmpDir("mr-fail-exe")
+    val cat = writeExe(exeDir, "cat.sh", "#!/bin/sh\ncat\n")
+    val boom = writeExe(exeDir, "boom.sh", "#!/bin/sh\ncat\nexit 3\n")
+    val out = tmpDir("mr-fail-out")
+    writeFile(out, "stale-file", "leftover\n")
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def tmpFiles = Files.list(tmp).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSet
+    val tmpBefore = tmpFiles
+    intercept[org.apache.spark.SparkException](
+      MapReduceJob.runExe(spark, in.toString, out.toString, cat, boom,
+        numMappers = 2, numReducers = 2))
+    assert(entryNames(out).isEmpty, entryNames(out).toString)
+    val newTmp = tmpFiles -- tmpBefore
+    assert(!newTmp.exists(_.startsWith("graft-part")), newTmp.toString)
   }
 
   test("per-file mapper mode runs a stateful mapper once per input file") {
@@ -421,13 +440,11 @@ class MapReduceJobSpec extends AnyFunSuite {
       !== Md5Partitioner.partitionFor("a\n", 1000))
   }
 
-  test("runExe with perFileMapper+committerSink end-to-end (the " +
-    "production-shaped path mr06 gate-checks)") {
+  test("runExe with perFileMapper end-to-end (mr06's production path)") {
     // granularity divergence itself (a split big file runs a stateful
     // mapper once per PARTITION without the flag) is pinned by the
-    // previous test; here the full exe job with BOTH production flags
-    // yields exactly one stateful-mapper line per input file, committed
-    // through FileOutputCommitter in the reference part layout
+    // previous test; here the full exe job yields exactly one
+    // stateful-mapper line per input file, in the reference part layout
     val in = tmpDir("mr-pf2-in")
     writeFile(in, "a.txt", "1\n2\n3\n")
     writeFile(in, "b.txt", "1\n")
@@ -438,8 +455,7 @@ class MapReduceJobSpec extends AnyFunSuite {
     val redExe = writeExe(exeDir, "r.sh", "#!/bin/sh\ncat\n")
     val out = tmpDir("mr-pf2-out").toString
     MapReduceJob.runExe(spark, in.toString, out, mapExe, redExe,
-      numMappers = 2, numReducers = 2,
-      perFileMapper = true, committerSink = true)
+      numMappers = 2, numReducers = 2, perFileMapper = true)
     val parts = Files.list(Paths.get(out)).iterator().asScala.toSeq
       .map(_.getFileName.toString).sorted
     assert(parts.forall(_.matches("part-\\d{5}")), parts.toString)
@@ -522,6 +538,18 @@ class MapReduceJobSpec extends AnyFunSuite {
         s"lengths ${g.map(_.length)} vs ${o.map(_.length)}")
     assert(MapReduceJob.inputRdd(spark, in.toString, 1).collect().toSeq ===
       oracle.flatten)
+    // the linedir connector reads through the same reader: per file,
+    // `value` by `line` is the oracle, `line` runs 1..n, `file` is the name
+    val linedir = spark.read.format("linedir").load(in.toString).collect()
+      .map(r => (r.getString(1), r.getLong(2), r.getString(0)))
+      .groupBy(_._1).map { case (f, rows) => f -> rows.sortBy(_._2).toSeq }
+    for (((name, _), o) <- files.zip(oracle)) {
+      val rows = linedir.getOrElse(name, Seq.empty)
+      assert(rows.map(_._3) === o, s"linedir $name: ${rows.map(_._3.take(40))}")
+      assert(rows.map(_._2) === (1L to o.size.toLong), s"linedir $name")
+    }
+    assert(linedir.keySet ===
+      files.zip(oracle).collect { case ((n, _), o) if o.nonEmpty => n }.toSet)
     // the fixture exercises what it claims to
     assert(oracle(8).exists(_.contains('\uFFFD')))
     assert(oracle(4).isEmpty && oracle(6).isEmpty && oracle(7) === Seq(""))

@@ -375,6 +375,27 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("linedir reads a Spark-written text dir as exactly its lines: " +
+    "_SUCCESS and .crc sidecars are not data") {
+    val dir = Files.createTempDirectory("graft-linedir-meta").resolve("t")
+    val lines = (1 to 20).map(i => s"row $i")
+    lines.toDF("value").repartition(3).write.text(dir.toString)
+    val all = Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    val parts = all.filter(_.startsWith("part-"))
+    // the writer left its metadata next to the parts
+    assert(all.contains("_SUCCESS") &&
+      all.exists(n => n.startsWith(".part-") && n.endsWith(".crc")), all)
+
+    val df = spark.read.format("linedir").load(dir.toString)
+    assert(df.select($"value").collect().map(_.getString(0)).sorted.toSeq ===
+      lines.sorted)
+    assert(df.rdd.getNumPartitions === parts.size)
+    assert(df.select($"file").distinct().collect().map(_.getString(0))
+      .sorted.toSeq === parts)
+    assert(LineDir.listSortedWithAttrs(dir.toString).map(_._1) === parts)
+  }
+
   test("listSortedWithAttrs: one-stat listing matches names, sizes, order") {
     val dir = Files.createTempDirectory("graft-attrs")
     Files.write(dir.resolve("b.txt"), "xyz\n".getBytes)
