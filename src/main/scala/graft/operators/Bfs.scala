@@ -13,12 +13,8 @@ import org.apache.spark.sql.functions._
   * CURRENT frontier joins the edge list each round (rows discovered
   * last round), so per-round work is frontier × out-degree, not
   * nodes × edges; the running distance table (one row per reached
-  * node) is eagerly checkpointed per round to keep the plan
-  * constant-size. Lineage cuts follow the [[ConnectedComponents]]
-  * contract: `checkpointDir = None` → `localCheckpoint` (local[n] /
-  * restartable batch); `Some(dir)` → reliable `checkpoint` into that
-  * directory, the production default at 100 TB where a deep BFS
-  * outlives preempted executors.
+  * node) is cut per round through [[Fixpoint]], which also counts the
+  * round's newly reached nodes on that cut: zero ends the loop.
   */
 object Bfs {
 
@@ -46,34 +42,24 @@ object Bfs {
     * @return columns `node`, `hop` (min hops from any source, ≤ maxHops) */
   def hops(edges: DataFrame, sources: DataFrame, maxHops: Int,
       checkpointDir: Option[String] = None,
-      requireExhausted: Boolean = false): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // rotated per-round cuts: a superseded distance table's blocks are
-      // unpersisted once 2 newer cuts exist (see [[LineageCut]]) — bounded
-      // storage by construction, not ContextCleaner timing
-      val lc = new LineageCut(checkpointDir)
+      requireExhausted: Boolean = false): DataFrame =
+    Fixpoint.run(edges.sparkSession, checkpointDir) { fx =>
       // pre-partitioned on the per-round join key (the g01 hoist): each
       // round's frontier⋈e join reshuffles only the frontier
-      val e = lc.pin(edges.select(col("u"), col("v")).repartition(col("u")))
-      var dist = lc(sources.select(col("node"), lit(0L).as("hop")).distinct())
-      var h = 1
-      var exhausted = false
-      while (h <= maxHops && !exhausted) {
+      val e = fx.pin(edges.select(col("u"), col("v")).repartition(col("u")))
+      val init = fx.cut(sources.select(col("node"), lit(0L).as("hop")).distinct())
+      // round h expands the hop-(h-1) frontier and counts the nodes it
+      // newly reached on its own cut: none means the next frontier is
+      // empty and can never add rows, so the loop stops instead of
+      // running the remaining maxHops rounds as no-ops (matters when
+      // callers pass a generous bound rather than the graph's diameter)
+      val (dist, exhausted) = fx.loop(init, maxHops) { (dist, h) =>
         val frontier = dist.filter(col("hop") === (h - 1))
-        // an empty frontier can never add rows — stop instead of running
-        // the remaining maxHops rounds as no-ops (matters when callers
-        // pass a generous bound rather than the graph's diameter)
-        if (frontier.limit(1).count() == 0L) exhausted = true
-        else {
-          val next = frontier.join(e, frontier("node") === e("u"))
-            .select(e("v").as("node"), lit(h.toLong).as("hop"))
-          dist = lc(dist.union(next)
-            .groupBy("node").agg(min("hop").as("hop")))
-        }
-        h += 1
+        val next = frontier.join(e, frontier("node") === e("u"))
+          .select(e("v").as("node"), lit(h.toLong).as("hop"))
+        val (merged, reached) = fx.cut.counting(dist.union(next)
+          .groupBy("node").agg(min("hop").as("hop")), col("hop") === h)
+        (merged, reached == 0L)
       }
       // truncation guard (round 14, r13 advice): when the loop ended on
       // the round CAP rather than an empty frontier, the reachable set
@@ -98,5 +84,4 @@ object Bfs {
       }
       dist
     }
-  }
 }

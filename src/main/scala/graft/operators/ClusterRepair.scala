@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   * At 100 TB: |affected| is delta-sized times duplication structure,
   * so repair cost tracks the corpus REFRESH, not the corpus — the
   * difference between a nightly 30-minute touch-up and a weekly
-  * full-graph re-cluster. Both iterative stages share the standard
-  * engine contract (per-round lineage cuts, core-tied layout,
-  * reliable-checkpoint option via `checkpointDir`).
+  * full-graph re-cluster. Both iterative stages run on [[Fixpoint]]
+  * (per-round lineage cuts, core-tied layout, reliable-checkpoint
+  * option via `checkpointDir`).
   */
 object ClusterRepair {
 

@@ -65,9 +65,7 @@ import org.apache.spark.sql.functions._
   * handing normalize the uncut broadcast sum (GROWTH_r16
   * `g10_cutRawSums`: parity at sf0.1 and sf10).
   *
-  * Score state is checkpointed per half-round (constant-size plans).
-  * Lineage cuts follow the [[ConnectedComponents]] contract via
-  * `checkpointDir`.
+  * Score state is cut per half-round on [[Fixpoint]].
   */
 object Hits {
 
@@ -90,42 +88,33 @@ object Hits {
       checkpointDir: Option[String] = None,
       tol: Long = 0L,
       broadcastScoreMax: Long = 32000000L): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
-      // TWO rotations (see [[LineageCut]]): score STATES rotate through
-      // the r13 window — h/a interleave through one keep=2 FIFO (a(n-1)
-      // is released when a(n) cuts, by which point h(n-1..n) were
-      // already materialized from it); tolerance mode keeps THREE
-      // generations because the Δa delta reads a(n-1) AFTER a(n) cuts.
-      // Broadcast mode's RAW SUMS get their own keep=1 rotation: a sum
+    require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
+    // the score STATES rotate through the r13 window — h/a interleave
+    // through one keep=2 FIFO (a(n-1) is released when a(n) cuts, by
+    // which point h(n-1..n) were already materialized from it);
+    // tolerance mode keeps THREE generations because the Δa delta reads
+    // a(n-1) AFTER a(n) cuts
+    Fixpoint.run(edges.sparkSession, checkpointDir,
+        keep = if (tol > 0L) 3 else 2) { fx =>
+      // broadcast mode's RAW SUMS get their own keep=1 rotation: a sum
       // is dead the moment its normalized state materializes, and
       // mixing the two lifetimes in one FIFO would either release the
       // final a-state before the output join reads it (keep=2) or hold
       // edge-adjacent generations longer than needed (keep=5)
-      val lc = new LineageCut(checkpointDir,
-        keep = if (tol > 0L) 3 else 2)
-      val lcSum = new LineageCut(checkpointDir, keep = 1)
+      val sumCuts = fx.rotation(keep = 1)
       val e = edges.select(col("u"), col("v"))
       // the ONE edge pin, pre-partitioned on u; the caller's edge plan
       // is evaluated exactly once, into this cut
-      val pinned = lc.pin(e.repartition(col("u")))
+      val pinned = fx.pin(e.repartition(col("u")))
       // node set and total degree (in+out, bag union) come from ONE
-      // grouped aggregate over the checkpointed copy — the count rides
-      // the same shuffle the distinct node set needs anyway, so the
-      // overflow guard below costs one node-sized agg over checkpointed
-      // edges instead of a second evaluation of the caller's plan
-      val grouped = lc.pin(pinned.select(col("u").as("node"))
-        .union(pinned.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d")))
+      // grouped aggregate over the pinned copy; the overflow guard's max
+      // degree and the node count that picks the round shape are both
+      // observed on that pin's own job
+      val (grouped, stats) = fx.pinWith(pinned.select(col("u").as("node"))
+          .union(pinned.select(col("v").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("d")),
+        coalesce(max("d"), lit(0L)), count(lit(1)))
       val nodes = grouped.select(col("node"))
-      // one setup job reads both the overflow guard's max degree and
-      // the node count that picks the round shape
-      val stats = grouped
-        .agg(coalesce(max("d"), lit(0L)).as("m"), count(lit(1)).as("n"))
-        .head
       val (maxDeg, nNodes) = (stats.getLong(0), stats.getLong(1))
       // loud int64-headroom guard (scaladoc above): scores are ≤ 1e6
       // after max-normalization, so an unnormalized sum is ≤ 1e6·degree
@@ -138,8 +127,6 @@ object Hits {
           s"(found a node with total degree $maxDeg); drop the score scale " +
           "to 1e3 or renormalize in two steps — see scaladoc")
       val bcast = nNodes <= broadcastScoreMax
-      var h = nodes.withColumn("h", lit(1000000L))
-      var a = nodes.withColumn("a", lit(1000000L))
       // one-row max|Δ| between two adjacent score states (tol mode only)
       def delta(cur: DataFrame, prev: DataFrame, c: String): Long =
         cur.select(col("node"), col(c))
@@ -159,7 +146,7 @@ object Hits {
           .groupBy(col(groupKey))
           .agg(sum(stateCol).as("s"))
           .select(col(groupKey).as("node"), col("s"))
-        if (bcast) lcSum(raw) else raw
+        if (bcast) sumCuts(raw) else raw
       }
       // normalize a raw sum to (1e6 · s) div max(s) over the full node
       // set (nodes absent from the sum score 0). The one-row max
@@ -171,7 +158,7 @@ object Hits {
       // evaluation, its cost model unchanged.
       def normalize(raw: DataFrame, outCol: String): DataFrame = {
         val m = raw.agg(max("s").as("m"))
-        lc(nodes
+        fx.cut(nodes
           .join(if (bcast) broadcast(raw) else raw, Seq("node"), "left")
           .crossJoin(broadcast(m))
           .select(col("node"),
@@ -182,18 +169,15 @@ object Hits {
       // cut was measured SLOWER in the shuffle shape (sf0.1, warm min
       // 5.9 s vs 3.8 s) because the max broadcast subquery and the
       // normalize join then each re-evaluate the edge-sized sum
-      var i = 0
-      var converged = false
-      while (i < iterations && !converged) {
-        val (hPrev, aPrev) = (h, a)
-        a = normalize(rawSum(h, "h", "u", "v"), "a")
-        // Δa must read a(n-1) HERE, before the h-half-round's cut
-        // rotates it out of the keep=3 window
-        val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
-        h = normalize(rawSum(a, "a", "v", "u"), "h")
-        if (tol > 0L)
-          converged = dA <= tol && delta(h, hPrev, "h") <= tol
-        i += 1
+      val ((h, a), _) = fx.loop((nodes.withColumn("h", lit(1000000L)),
+          nodes.withColumn("a", lit(1000000L))), iterations) {
+        case ((hPrev, aPrev), _) =>
+          val a = normalize(rawSum(hPrev, "h", "u", "v"), "a")
+          // Δa must read a(n-1) HERE, before the h-half-round's cut
+          // rotates it out of the keep=3 window
+          val dA = if (tol > 0L) delta(a, aPrev, "a") else Long.MaxValue
+          val h = normalize(rawSum(a, "a", "v", "u"), "h")
+          ((h, a), tol > 0L && dA <= tol && delta(h, hPrev, "h") <= tol)
       }
       h.join(a, "node")
         .select(col("node"), col("h").as("hub_e6"), col("a").as("auth_e6"))

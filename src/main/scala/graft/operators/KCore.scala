@@ -37,12 +37,8 @@ import org.apache.spark.sql.functions._
   *     keep-set semi-joins + repartition — never an unbounded
   *     broadcast. 4M node ids ≈ 32 MB broadcast is the default bound.
   *
-  * Rounds are eagerly cut like [[ConnectedComponents]]: without the
-  * lineage cut, each round's plan embeds the previous round's and
-  * analysis cost compounds. Lineage cuts follow the
-  * [[ConnectedComponents]] contract: `checkpointDir = None` →
-  * `localCheckpoint`; `Some(dir)` → reliable `checkpoint` for
-  * preemption-prone clusters.
+  * Rounds run on [[Fixpoint]]; the drop count is observed on the drop
+  * set's own cut.
   */
 object KCore {
 
@@ -69,59 +65,44 @@ object KCore {
     *                      anti-join to the shuffle semi-join path */
   def core(edges: DataFrame, k: Int, maxRounds: Int = 50,
       checkpointDir: Option[String] = None,
-      broadcastDropMax: Long = DefaultBroadcastDropMax): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // rotated per-round cuts: a peeled-away edge generation's blocks
-      // are unpersisted once 2 newer cuts exist (see [[LineageCut]])
-      val lc = new LineageCut(checkpointDir)
+      broadcastDropMax: Long = DefaultBroadcastDropMax): DataFrame =
+    Fixpoint.run(edges.sparkSession, checkpointDir) { fx =>
       // the per-round drop set is cut through its OWN keep=1 rotation:
-      // materialized once, then read (for free) by the count and both
-      // broadcast builds — without the cut each of those would re-scan
-      // the edge relation to recompute the aggregation. Safe at keep=1:
-      // by the time round n+1's drop set cuts, round n's `next` was
-      // already materialized from round n's drops.
-      val lcDrops = new LineageCut(checkpointDir, keep = 1)
-      var cur = lc(edges.select(col("u"), col("v")).repartition(col("u")))
-      var stable = false
-      var round = 0
-      while (!stable && round < maxRounds) {
+      // materialized once, counted on that same job, then read (for
+      // free) by both broadcast builds — without the cut each of those
+      // would re-scan the edge relation to recompute the aggregation.
+      // Safe at keep=1: by the time round n+1's drop set cuts, round
+      // n's peel was already materialized from round n's drops.
+      val dropCuts = fx.rotation(keep = 1)
+      val init = fx.cut(edges.select(col("u"), col("v")).repartition(col("u")))
+      val (cur, _) = fx.loop(init, maxRounds) { (cur, _) =>
         // node-sized degree table; cur is hash-partitioned on u (the
         // initial repartition survives every peel variant below), so
         // this aggregation plans WITHOUT an Exchange
         val deg = cur.groupBy("u").agg(count(lit(1)).as("deg"))
-        val drops = lcDrops(deg.filter(col("deg") < k).select("u"))
-        val nDrop = drops.count()
-        if (nDrop == 0L) stable = true
+        val (drops, nDrop) =
+          dropCuts.counting(deg.filter(col("deg") < k).select("u"), lit(true))
+        if (nDrop == 0L) (cur, true)
+        else if (nDrop <= broadcastDropMax)
+          // tiny drop set (the steady-state case the sf10 profile
+          // measured): anti-join BOTH endpoints against the broadcast
+          // set — no shuffle, partitioning preserved
+          (fx.cut(cur
+            .join(broadcast(drops), Seq("u"), "left_anti")
+            .join(broadcast(drops.withColumnRenamed("u", "v")),
+              Seq("v"), "left_anti")
+            .select(col("u"), col("v"))), false)
         else {
-          val next =
-            if (nDrop <= broadcastDropMax)
-              // tiny drop set (the steady-state case the sf10 profile
-              // measured): anti-join BOTH endpoints against the
-              // broadcast set — no shuffle, partitioning preserved
-              lc(cur
-                .join(broadcast(drops), Seq("u"), "left_anti")
-                .join(broadcast(drops.withColumnRenamed("u", "v")),
-                  Seq("v"), "left_anti")
-                .select(col("u"), col("v")))
-            else {
-              // mass-shedding round: keep-set semi-joins (shuffle-
-              // bounded by the surviving edges), then restore the
-              // u-partitioning the loop relies on
-              val keep = deg.filter(col("deg") >= k).select("u")
-              lc(cur
-                .join(keep, Seq("u"), "left_semi")
-                .join(keep.withColumnRenamed("u", "v"), Seq("v"),
-                  "left_semi")
-                .select(col("u"), col("v")).repartition(col("u")))
-            }
-          cur = next
-          round += 1
+          // mass-shedding round: keep-set semi-joins (shuffle-bounded
+          // by the surviving edges), then restore the u-partitioning
+          // the loop relies on
+          val keep = deg.filter(col("deg") >= k).select("u")
+          (fx.cut(cur
+            .join(keep, Seq("u"), "left_semi")
+            .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
+            .select(col("u"), col("v")).repartition(col("u"))), false)
         }
       }
       cur.groupBy(col("u").as("node")).agg(count(lit(1)).as("core_deg"))
     }
-  }
 }

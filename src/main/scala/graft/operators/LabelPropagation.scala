@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Semi-supervised label propagation with clamped labels and convergence
   * detection — the fixpoint twin of the 2-round unroll in
@@ -22,12 +21,7 @@ import org.apache.spark.storage.StorageLevel
   * Shape per round — all keyed on node id, never all-pairs:
   * one edges⋈labels equi-join shuffled on node, one (node,label) count
   * aggregate (partial map-side), one node-partitioned argmax window.
-  * Each round's label table is eagerly cut from lineage exactly like
-  * ConnectedComponents (scaladoc there explains why): `localCheckpoint`
-  * by default (executor blocks, no I/O — fine on local[n], fragile
-  * under executor loss), reliable `checkpoint(dir)` when
-  * `checkpointDir` is set (survives executor preemption; the production
-  * default at 100 TB).
+  * Rounds run on [[Fixpoint]].
   */
 object LabelPropagation {
 
@@ -60,38 +54,23 @@ object LabelPropagation {
   def propagate(edges: DataFrame, seeds: DataFrame,
       maxIterations: Int = 50,
       checkpointDir: Option[String] = None,
-      minDelta: Long = 0L): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      // rotated per-round cuts: won/labels interleave through one keep=2
-      // FIFO — labels(n-1) is released when labels(n) cuts, by which point
-      // won(n) and labels(n) were already materialized from it
-      val lc = new LineageCut(checkpointDir)
+      minDelta: Long = 0L): DataFrame =
+    Fixpoint.run(edges.sparkSession, checkpointDir) { fx =>
       // pre-partitioned on the per-round join key (the g01 hoist): each
       // round's e⋈labels join reshuffles only the label table
-      val e = edges.toDF("u", "v").repartition(col("u"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var labels = lc(seeds.toDF("node", "label"))
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val won = lc(round(e, labels))
-        // fixpoint mode keeps the cheap emptiness probe; delta mode
-        // counts the (already checkpointed) win table — one scan of
-        // node-sized state, dwarfed by the round's edge join
-        val nWon =
-          if (minDelta == 0L) won.limit(1).count()
-          else won.count()
-        if (nWon <= minDelta) converged = true
-        if (nWon > 0L) labels = lc(labels.union(won))
-        i += 1
+      val e = fx.pin(edges.toDF("u", "v").repartition(col("u")))
+      // won/labels interleave through the one keep=2 rotation:
+      // labels(n-1) is released when labels(n) cuts, by which point
+      // won(n) and labels(n) were already materialized from it. The won
+      // cut counts its own rows; minDelta = 0 stops on an empty round.
+      val (labels, _) = fx.loop(fx.cut(seeds.toDF("node", "label")),
+          maxIterations) { (labels, _) =>
+        val (won, nWon) = fx.cut.counting(round(e, labels), lit(true))
+        (if (nWon > 0L) fx.cut(labels.union(won)) else labels,
+          nWon <= minDelta)
       }
-      e.unpersist()
       labels
     }
-  }
 
   /** One propagation round: (node, label) wins among the still-unlabeled
     * neighbors of labeled nodes. Exposed (package-private) so plan

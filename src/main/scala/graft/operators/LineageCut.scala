@@ -1,30 +1,24 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
-/** Per-round lineage cut with BOUNDED storage for the iterative
-  * operators (PageRank, Bfs, Sssp, Hits, KCore, LabelPropagation,
-  * ConnectedComponents).
-  *
-  * Every loop eagerly checkpoints its per-round state so plans stay
-  * constant-size (the [[ConnectedComponents]] contract). Before this
-  * helper, each superseded round's `localCheckpoint` blocks were left
-  * to the ContextCleaner — correct, but block eviction then depends on
-  * driver GC timing, so a 100-iteration production run could hold many
-  * node-sized states at once. This helper makes the bound structural:
-  * it keeps a FIFO of the live cuts and explicitly unpersists a cut's
-  * blocks as soon as it falls `keep` generations behind — at which
-  * point every later state has already been materialized FROM it
-  * (eager cuts), so nothing can ever recompute through it.
+/** The bounded-storage rotation behind [[Fixpoint]]'s cuts (the cut
+  * contract itself — why every round state is cut, and the two cut
+  * flavors — lives there). It keeps a FIFO of the live cuts and
+  * explicitly unpersists a cut's blocks as soon as it falls `keep`
+  * generations behind — at which point every later state has already
+  * been materialized FROM it (eager cuts), so nothing can ever
+  * recompute through it. Without it each superseded round's blocks
+  * wait for the ContextCleaner, so eviction depends on driver GC timing
+  * and a 100-iteration run could hold many node-sized states at once.
   *
   * `keep` is the number of generations a loop can still reference
   * after a new cut materializes: 2 for every single-state loop
   * (previous round feeds only the next round's cut) and for the
   * interleaved two-state loops (HITS h/a, LabelPropagation won/labels).
-  * [[Sssp]] also runs at keep=2 since round 15: its frontier is a
-  * filter over the merged state's own-distance column, not a separate
-  * cut reading two generations back.
   *
   * Mechanics: `Dataset.checkpoint`/`localCheckpoint` return a Dataset
   * whose analyzed plan is a `LogicalRDD` over the internal
@@ -32,54 +26,41 @@ import org.apache.spark.sql.DataFrame
   * it is what gets unpersisted on eviction. In reliable-checkpoint
   * mode (`checkpointDir = Some(dir)`) the data lives in checkpoint
   * FILES, not blocks, so eviction DELETES the evicted generation's
-  * `rdd-<id>` directory (best-effort): a 100-round production run
-  * previously accumulated 100 node-sized tables on HDFS —
-  * ContextCleaner only removes them on driver GC and only with
+  * `rdd-<id>` directory (best-effort): ContextCleaner only removes them
+  * on driver GC and only with
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, whereas
   * the rotation knows EXACTLY when a generation is dead (every later
   * state was already written from it; re-executing a live generation
   * reads its OWN files, never an ancestor's). Spark logs one WARN per
   * local-mode eviction ("locally checkpointed ... cannot be recomputed
-  * after unpersisting") — that is the bound working as designed, not a
-  * problem: eviction only happens `keep` materialized generations
-  * later, when recomputation is impossible to need.
+  * after unpersisting") — the bound working as designed.
   *
-  * Setup relations that must survive the whole run (edge lists, node
-  * sets, seed sets — the g01 hoist products) go through [[pin]],
+  * Setup relations that must survive the whole run go through [[pin]],
   * which cuts WITHOUT enrolling in the rotation.
   */
-object LineageCut {
-  /** Reliable-mode observability (round 13 PageRank, shared round 14):
-    * announce a just-cut round state's checkpoint FILE on stderr so an
-    * external supervisor can resume from the last completed round
-    * after a driver loss. Metadata-sized (one line per round); silent
-    * in localCheckpoint mode (getCheckpointFile is Some only for
-    * reliable checkpoints). The line format is the contract
-    * tools/drill_preempt.py greps: `[<tag>] round <n> complete: <file>`.
-    *
-    * SUPERVISOR CONTRACT (round 16, the r15 advice): announced round
-    * numbers are globally monotonic across kills — every resume
-    * surface ([[PageRank.ranks]], [[ConnectedComponents.minLabel]])
-    * takes a `roundOffset` that the resume leg sets to the prior
-    * run's completed-round count, so a resumed run announces
-    * (offset+1, offset+2, ...), and a supervisor surviving a SECOND
-    * kill reads total progress straight off the latest announcement.
-    * A caller that resumes WITHOUT passing the offset degrades to the
-    * round-15 contract (local numbering; the supervisor must sum
-    * per-run counts itself). The state FILE is self-contained either
-    * way (it holds the full node-sized state, not a delta), so
-    * resuming from the latest announced file is always correct. */
-  def announceRound(df: DataFrame, tag: String, round: Int): Unit =
-    CheckpointRecovery.checkpointFileOf(df).foreach { f =>
-      System.err.println(s"[$tag] round $round complete: $f")
-    }
-}
-
 final class LineageCut(checkpointDir: Option[String], keep: Int = 2) {
   require(keep >= 1, "LineageCut must keep at least one generation")
   private val live = scala.collection.mutable.Queue.empty[RDD[_]]
 
   private def cutOnly(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    // localCheckpoint marks its internal RDD persisted BEFORE the job
+    // that fills it runs, so a cut whose plan throws would leave that
+    // RDD registered until driver GC. Release what appeared during a
+    // failed cut; the engines drive their loops from one thread, so
+    // nothing else persists in the meantime.
+    val before = sc.getPersistentRDDs.keySet
+    try cutOrThrow(df)
+    catch {
+      case NonFatal(t) =>
+        sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before(id)) graft.Caches.releaseRdd(rdd, blocking = true)
+        }
+        throw t
+    }
+  }
+
+  private def cutOrThrow(df: DataFrame): DataFrame = {
     checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
     if (checkpointDir.isDefined) {
       // Reliable Dataset.checkpoint computes its plan TWICE: the eager

@@ -85,15 +85,9 @@ import org.apache.spark.sql.functions._
   * edge plan must cut it themselves before calling (localCheckpoint /
   * [[LineageCut.pin]]), exactly as GraphPack does.
   *
-  * Each round's rank state (one row per node) is eagerly checkpointed
-  * so the plan stays constant-size across iterations. Lineage cuts
-  * follow the
-  * [[ConnectedComponents]] contract: `checkpointDir = None` uses
-  * `localCheckpoint` (no extra I/O, but blocks pin executors and die
-  * with them — fine on local[n]); `Some(dir)` uses reliable
-  * `checkpoint` into that directory (survives executor loss — the
-  * production default at 100 TB, and PageRank is the operator most
-  * likely to run long enough to see one die).
+  * Rounds run on [[Fixpoint]] (announced as `pagerank`); PageRank is
+  * the operator most likely to run long enough to see an executor die,
+  * so reliable cuts are its production default at 100 TB.
   */
 object PageRank {
 
@@ -168,7 +162,7 @@ object PageRank {
     * @param roundOffset   rounds completed BEFORE this run (round 16,
     *                      the r15 advice): a resume leg passes the
     *                      prior run's completed-round count so
-    *                      [[LineageCut.announceRound]] numbers stay
+    *                      [[Fixpoint]]'s announced round numbers stay
     *                      globally monotonic across kills — the
     *                      supervisor reads progress straight off the
     *                      announcements instead of accumulating
@@ -184,19 +178,12 @@ object PageRank {
       broadcastRankMax: Long = 32000000L,
       trustSymmetry: Boolean = false,
       roundOffset: Int = 0): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
-      require(teleportTo.isEmpty || !redistributeDangling,
-        "teleportTo is only supported under the symmetric contract " +
-          "(redistributeDangling=false)")
-      require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
-      // per-round cuts rotate through LineageCut so superseded rounds'
-      // blocks are unpersisted BY CONSTRUCTION (≤2 rank states live at
-      // any time), not left to ContextCleaner GC timing; setup relations
-      // are pinned for the whole run
-      val lc = new LineageCut(checkpointDir)
+    require(teleportTo.isEmpty || !redistributeDangling,
+      "teleportTo is only supported under the symmetric contract " +
+        "(redistributeDangling=false)")
+    require(tol >= 0L, s"tol must be ≥ 0 (got $tol)")
+    Fixpoint.run(edges.sparkSession, checkpointDir, announce = Some("pagerank"),
+        roundOffset = roundOffset) { fx =>
       // NOT pinned (input contract above): production callers pass
       // memoized block scans, and an edge-sized pin here was half the
       // measured sf10 setup wall
@@ -248,57 +235,40 @@ object PageRank {
 
       // shared round driver for all three modes: fixed-count when tol=0
       // (the pre-tol behavior, bit-identical), early-stop on
-      // max|Δr| ≤ tol otherwise. prev and r are adjacent LineageCut
+      // max|Δr| ≤ tol otherwise. prev and r are adjacent rotation
       // generations (keep=2), so prev's blocks are still live when the
       // delta reads them.
-      def loop(init: DataFrame)(step: DataFrame => DataFrame): DataFrame = {
-        var r = init
-        var i = 0
-        var converged = false
-        while (i < iterations && !converged) {
-          val prev = r
-          r = step(prev)
-          // reliable-mode observability (round 13, the preemption
-          // drill's hook; shared helper since round 14). roundOffset
-          // keeps announced numbers globally monotonic across resumes
-          // (round 16, the r15 advice): a resume leg passes the rounds
-          // already completed before the kill, so a supervisor reads
-          // global progress off the announcement itself instead of
-          // re-deriving it by summing per-run counts.
-          LineageCut.announceRound(r, "pagerank", roundOffset + i + 1)
-          if (tol > 0L) {
-            val delta = r.select(col("node"), col("r"))
-              .join(prev.select(col("node"), col("r").as("r_prev")), "node")
-              .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L))
-                .as("d"))
-              .head.getLong(0)
-            converged = delta <= tol
-          }
-          i += 1
-        }
-        r
-      }
+      def loop(init: DataFrame)(step: DataFrame => DataFrame): DataFrame =
+        fx.loop(init, iterations) { (prev, _) =>
+          val r = step(prev)
+          (r, tol > 0L && r.select(col("node"), col("r"))
+            .join(prev.select(col("node"), col("r").as("r_prev")), "node")
+            .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)).as("d"))
+            .head.getLong(0) <= tol)
+        }._1
       // resume surface: a caller-provided starting state replaces the
       // uniform init — cut once so the first round's two reads (dsum +
       // inflow in the redistribute mode) don't re-evaluate an arbitrary
       // caller plan (e.g. a checkpoint-recovery scan)
       val resumeInit: Option[DataFrame] =
-        initialRanks.map(df => lc.pin(df.select(col("node"), col("r"))))
-  
+        initialRanks.map(df => fx.pin(df.select(col("node"), col("r"))))
+
       if (!redistributeDangling) {
         // THE one edge-sized shuffle+write of the run (round 14): a
         // narrow (u, v) pin pre-partitioned on the SOURCE key. The
         // caller's plan is evaluated exactly once, into this cut;
         // everything below derives from checkpointed blocks.
-        val eByU = lc.pin(e.repartition(col("u")))
+        val eByU = fx.pin(e.repartition(col("u")))
         // ZERO-shuffle degree table: the groupBy reuses the pin's
         // hash(u) partitioning, so no map-side partials ever move (at
         // sf30 the r13 partial-combine over a hash-scattered 352M-row
         // list shuffled near-edge-sized — the superlinear-setup term)
-        val degP = lc.pin(eByU.groupBy("u").agg(count(lit(1)).as("d")))
-        // node set = sources (symmetric contract) — one setup count
-        // decides broadcast vs shuffle shape for the whole run
-        val bcast = degP.count() <= broadcastRankMax
+        // node set = sources (symmetric contract): its size, observed
+        // on the pin's own job, decides broadcast vs shuffle shape for
+        // the whole run
+        val (degP, n) = fx.pinWith(eByU.groupBy("u").agg(count(lit(1)).as("d")),
+          count(lit(1)))
+        val bcast = n.getLong(0) <= broadcastRankMax
         // loud guard for the documented contract (scaladoc above): a
         // destination with no out-edges would silently absorb rank.
         // Anti HASH join of pinned destinations against the (broadcast)
@@ -324,8 +294,8 @@ object PageRank {
           if (bcast) {
             if (trustSymmetry)
               eByU.select(col("v").as("u"), col("u").as("v"))
-            else lc.pin(eByU.repartition(col("v")))
-          } else lc.pin(eByU.join(degP, "u"))
+            else fx.pin(eByU.repartition(col("v")))
+          } else fx.pin(eByU.join(degP, "u"))
         val init = resumeInit.getOrElse(
           degP.select(col("u").as("node"), lit(1000000L).as("r")))
         teleportTo match {
@@ -334,7 +304,7 @@ object PageRank {
             // inflow relation covers the whole node set and the damped
             // update is a straight projection of it
             loop(init) { prev =>
-              lc(inflowOf(ed, degP, prev, bcast)
+              fx.cut(inflowOf(ed, degP, prev, bcast)
                 .select(col("node"),
                   expr("CAST(150000 + (85 * inflow) div 100 AS BIGINT)")
                     .as("r")))
@@ -344,11 +314,11 @@ object PageRank {
             // update is anchored on the node set (= sources, symmetric
             // contract), not on the destinations that happened to receive
             val nodes = degP.select(col("u").as("node"))
-            val seeds = lc.pin(t.select(col("node")).distinct()
+            val seeds = fx.pin(t.select(col("node")).distinct()
               .withColumn("is_seed", lit(1)))
             loop(init) { prev =>
               val inflow = inflowOf(ed, degP, prev, bcast)
-              lc(nodes
+              fx.cut(nodes
                 .join(inflow, Seq("node"), "left_outer")
                 .join(seeds, Seq("node"), "left_outer")
                 .select(col("node"),
@@ -364,16 +334,17 @@ object PageRank {
         // an independent repartition — by DESTINATION for the broadcast
         // round shape, or contribution edges (u, v, d) by SOURCE for
         // the shuffle fallback
-        val degP = lc.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
-        val nodes = lc.pin(e.select(col("u").as("node"))
-          .union(e.select(col("v").as("node"))).distinct())
-        // graph cardinality is fixed across rounds — one setup count, a
-        // literal thereafter (metadata-sized, not a per-round collect)
-        val n = nodes.count()
+        val degP = fx.pin(e.groupBy("u").agg(count(lit(1)).as("d")))
+        // graph cardinality is fixed across rounds — observed once on the
+        // node pin's own job, a literal thereafter (metadata-sized, not a
+        // per-round collect)
+        val (nodes, stats) = fx.pinWith(e.select(col("u").as("node"))
+          .union(e.select(col("v").as("node"))).distinct(), count(lit(1)))
+        val n = stats.getLong(0)
         val bcast = n <= broadcastRankMax
         val ed =
-          if (bcast) lc.pin(e.repartition(col("v")))
-          else lc.pin(e.join(degP, "u").repartition(col("u")))
+          if (bcast) fx.pin(e.repartition(col("v")))
+          else fx.pin(e.join(degP, "u").repartition(col("u")))
         val danglingNodes = nodes.join(
           degP.select(col("u").as("node")), Seq("node"), "left_anti")
         val init = resumeInit.getOrElse(nodes.withColumn("r", lit(1000000L)))
@@ -383,7 +354,7 @@ object PageRank {
           val dsum = prev.join(danglingNodes, Seq("node"), "left_semi")
             .agg(coalesce(sum("r"), lit(0L)).as("dsum"))
           val inflow = inflowOf(ed, degP, prev, bcast)
-          lc(nodes
+          fx.cut(nodes
             .join(inflow, Seq("node"), "left_outer")
             .crossJoin(broadcast(dsum))
             .select(col("node"),

@@ -19,13 +19,8 @@ import org.apache.spark.sql.functions._
   * can only re-derive candidates it already produced — so per-round
   * work is frontier × out-degree, not nodes × edges, and the loop
   * stops early once a round improves nothing (negative weights are
-  * rejected; with them the fixpoint argument fails).
-  *
-  * Lineage cuts follow the [[ConnectedComponents]] contract:
-  * `checkpointDir = None` → `localCheckpoint` (local[n] / restartable
-  * batch); `Some(dir)` → reliable `checkpoint` into that directory,
-  * the production default at 100 TB where a deep relaxation outlives
-  * preempted executors.
+  * rejected; with them the fixpoint argument fails). Rounds run on
+  * [[Fixpoint]].
   */
 object Sssp {
 
@@ -42,54 +37,41 @@ object Sssp {
     * @return columns `node`, `d` (min summed weight from any source
     *         over ≤ maxRounds edges; unreached nodes absent) */
   def distances(edges: DataFrame, sources: DataFrame, maxRounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // core-tied round layout (see [[RoundLayout]]): node-sized
-    // per-round state must not inherit a corpus-derived session
-    // partition count -- measured at sf10 in GROWTH_r10
-    RoundLayout.coreTied(edges.sparkSession) {
+      checkpointDir: Option[String] = None): DataFrame =
+    Fixpoint.run(edges.sparkSession, checkpointDir) { fx =>
+      // pre-partitioned on the per-round join key (the g01 hoist): each
+      // round's frontier⋈e join reshuffles only the frontier. The
+      // negative-weight guard is counted on the pin's own job.
+      val (e, guard) = fx.pinWith(edges.select(col("u"), col("v"), col("w"))
+        .repartition(col("u")), count(when(col("w") < 0, true)))
+      require(guard.getLong(0) == 0L,
+        "Sssp requires non-negative edge weights: with negative weights " +
+          "the empty-frontier stop is not a fixpoint proof")
       // ROUND SHAPE (round 15 — ConnectedComponents' own-flag trick):
       // change detection rides the SAME min-aggregate. Each node's own
       // prior distance travels through the union flagged `own`; the
       // aggregate keeps min(all) AND min(own), and the next frontier is
-      // a cheap FILTER over the already-checkpointed merge (d < od, or
-      // od null for a newly reached node) — the r14 shape paid a second
-      // node-sized join (merged ⋈ dist) plus a SECOND lineage cut per
-      // round just to diff adjacent states. One cut per round also
-      // drops the rotation back to keep=2 (merged(n) reads only
-      // merged(n-1), through the dist projection and the frontier
-      // filter).
-      val lc = new LineageCut(checkpointDir)
-      // pre-partitioned on the per-round join key (the g01 hoist): each
-      // round's frontier⋈e join reshuffles only the frontier
-      val e = lc.pin(edges.select(col("u"), col("v"), col("w"))
-        .repartition(col("u")))
-      require(e.filter(col("w") < 0).limit(1).count() == 0L,
-        "Sssp requires non-negative edge weights: with negative weights " +
-          "the empty-frontier stop is not a fixpoint proof")
-      var merged = lc(sources.select(col("node"), lit(0L).as("d")).distinct()
+      // a cheap FILTER over the already-cut merge (d < od, or od null
+      // for a newly reached node) — no second node-sized join or cut
+      // per round just to diff adjacent states, and the rotation stays
+      // at keep=2 (merged(n) reads only merged(n-1)). The same filter,
+      // observed on the merge's own cut, counts the next frontier: an
+      // empty one means the round improved nothing, so every
+      // ≤-maxRounds-edge path minimum is already final.
+      val improved = col("od").isNull || col("d") < col("od")
+      val init = fx.cut(sources.select(col("node"), lit(0L).as("d")).distinct()
         .withColumn("od", lit(null).cast("long")))
-      def dist = merged.select(col("node"), col("d"))
-      def frontier = merged
-        .filter(col("od").isNull || col("d") < col("od"))
-        .select(col("node"), col("d"))
-      var r = 1
-      var exhausted = false
-      while (r <= maxRounds && !exhausted) {
-        // an empty frontier means the last round improved nothing —
-        // every ≤-maxRounds-edge path minimum is already in `dist`
-        if (frontier.limit(1).count() == 0L) exhausted = true
-        else {
-          val f = frontier
-          val cand = f.join(e, f("node") === e("u"))
-            .select(e("v").as("node"), (f("d") + e("w")).as("d"),
-              lit(0L).as("own"))
-          merged = lc(dist.withColumn("own", lit(1L)).union(cand)
-            .groupBy("node").agg(min("d").as("d"),
-              min(when(col("own") === 1L, col("d"))).as("od")))
-        }
-        r += 1
+      val (merged, _) = fx.loop(init, maxRounds) { (merged, _) =>
+        val f = merged.filter(improved).select(col("node"), col("d"))
+        val cand = f.join(e, f("node") === e("u"))
+          .select(e("v").as("node"), (f("d") + e("w")).as("d"),
+            lit(0L).as("own"))
+        val (next, frontier) = fx.cut.counting(merged
+          .select(col("node"), col("d"), lit(1L).as("own")).union(cand)
+          .groupBy("node").agg(min("d").as("d"),
+            min(when(col("own") === 1L, col("d"))).as("od")), improved)
+        (next, frontier == 0L)
       }
-      dist
+      merged.select(col("node"), col("d"))
     }
-  }
 }
